@@ -3,6 +3,9 @@ package graft.cdc
 import java.nio.charset.StandardCharsets.UTF_8
 import java.security.MessageDigest
 
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser, JsonToken}
+import com.fasterxml.jackson.core.JsonParser.NumberType
+import com.fasterxml.jackson.core.io.{NumberInput, NumberOutput}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 import org.apache.spark.sql.types.StructType
@@ -22,6 +25,7 @@ import scala.jdk.CollectionConverters._
 object Protocol {
 
   private val mapper = new ObjectMapper()
+  private val jsonFactory = new JsonFactory()
 
   /** Auth message: `hex(user ":" sha1(password))` — `client.go:324-347`. */
   def formatAuthCommand(user: String, password: String): String = {
@@ -72,19 +76,79 @@ object Protocol {
     }
 
   /** Decode one DML line into the envelope + verbatim raw —
-    * `client.go:306-314` + `event.go:188-212`. */
+    * `client.go:306-314` + `event.go:188-212`.
+    *
+    * One streaming pass, no JSON tree: the 8 envelope keys are read as
+    * they go by and every other value is skipped. Each key converts the
+    * way `readTree(line).path(key).asInt/asLong/asText` does, so an
+    * absent key reads as 0 or "", a quoted number is parsed, a JSON
+    * `null` under a text key reads as "null", an object or array under
+    * a key reads as 0 or "", and a repeated key's last value wins.
+    * Malformed JSON throws. */
   def decodeDmlEvent(line: String): CdcModel.DmlEvent = {
-    val n = mapper.readTree(line)
-    CdcModel.DmlEvent(
-      domain = n.path("domain").asInt(),
-      serverId = n.path("server_id").asInt(),
-      sequence = n.path("sequence").asLong(),
-      eventNumber = n.path("event_number").asInt(),
-      timestamp = n.path("timestamp").asLong(),
-      eventType = n.path("event_type").asText(),
-      tableName = n.path("table_name").asText(),
-      tableSchema = n.path("table_schema").asText(),
-      raw = line)
+    var domain, serverId, eventNumber = 0
+    var sequence, timestamp = 0L
+    var eventType, tableName, tableSchema = ""
+    val p = jsonFactory.createParser(line)
+    try {
+      if (p.nextToken() == JsonToken.START_OBJECT) {
+        var key = p.nextFieldName()
+        while (key != null) {
+          p.nextToken()
+          key match {
+            case "domain" => domain = intValue(p)
+            case "server_id" => serverId = intValue(p)
+            case "sequence" => sequence = longValue(p)
+            case "event_number" => eventNumber = intValue(p)
+            case "timestamp" => timestamp = longValue(p)
+            case "event_type" => eventType = textValue(p)
+            case "table_name" => tableName = textValue(p)
+            case "table_schema" => tableSchema = textValue(p)
+            case _ =>
+          }
+          p.skipChildren() // no-op on a scalar
+          key = p.nextFieldName()
+        }
+      } else p.skipChildren()
+    } finally p.close()
+    CdcModel.DmlEvent(domain, serverId, sequence, eventNumber, timestamp,
+      eventType, tableName, tableSchema, raw = line)
+  }
+
+  // JsonNode.asInt() of the value at the parser's current token.
+  private def intValue(p: JsonParser): Int = p.currentToken match {
+    case JsonToken.VALUE_NUMBER_INT => p.getNumberType match {
+      case NumberType.INT => p.getIntValue
+      case NumberType.LONG => p.getLongValue.toInt
+      case _ => p.getBigIntegerValue.intValue
+    }
+    case JsonToken.VALUE_NUMBER_FLOAT => p.getDoubleValue.toInt
+    case JsonToken.VALUE_STRING => NumberInput.parseAsInt(p.getText, 0)
+    case JsonToken.VALUE_TRUE => 1
+    case _ => 0
+  }
+
+  // JsonNode.asLong()
+  private def longValue(p: JsonParser): Long = p.currentToken match {
+    case JsonToken.VALUE_NUMBER_INT => p.getNumberType match {
+      case NumberType.BIG_INTEGER => p.getBigIntegerValue.longValue
+      case _ => p.getLongValue
+    }
+    case JsonToken.VALUE_NUMBER_FLOAT => p.getDoubleValue.toLong
+    case JsonToken.VALUE_STRING => NumberInput.parseAsLong(p.getText, 0L)
+    case JsonToken.VALUE_TRUE => 1L
+    case _ => 0L
+  }
+
+  // JsonNode.asText()
+  private def textValue(p: JsonParser): String = p.currentToken match {
+    case JsonToken.VALUE_STRING => p.getText
+    case JsonToken.VALUE_NUMBER_INT => p.getBigIntegerValue.toString
+    case JsonToken.VALUE_NUMBER_FLOAT => NumberOutput.toString(p.getDoubleValue)
+    case JsonToken.VALUE_TRUE => "true"
+    case JsonToken.VALUE_FALSE => "false"
+    case JsonToken.VALUE_NULL => "null"
+    case _ => ""
   }
 
   /** Decode one DDL line — `client.go:316-322` + the three `type` wire

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
 
 /** Spark DSv2 streaming source for MaxScale CDC (`format
   * ("maxscale-cdc")`).
@@ -44,6 +44,16 @@ import scala.collection.mutable.ArrayBuffer
   * `event_type = "ddl"` and a null envelope — schema-first, exactly
   * as the reference delivers them on the channel
   * (`client_test.go:135-137`).
+  *
+  * Where each line is decoded: the driver decodes every DML line once,
+  * in `MaxScaleCdcMicroBatchStream.drain()`, and keeps its stream key
+  * ("domain-server") and sequence beside the raw line; offsets,
+  * commits and the recovered-batch checks read those, never the JSON.
+  * The executor decodes each line once more into the envelope row.
+  * The input partition ships the raw lines rather than decoded
+  * envelopes: Java task serialization of per-line objects costs more
+  * than a second tree-free envelope scan (`Protocol.decodeDmlEvent`),
+  * and the `raw` column needs the line anyway.
   */
 class MaxScaleCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "maxscale-cdc"
@@ -125,7 +135,7 @@ final class MaxScaleCdcTable(properties: util.Map[String, String])
           new Batch {
             override def planInputPartitions(): Array[InputPartition] = {
               val t = MaxScaleCdcSource.transportFor(opts)
-              val lines = ArrayBuffer[String]()
+              val lines = mutable.ArrayBuffer[String]()
               try {
                 t.start()
                 var got = t.poll()
@@ -183,6 +193,10 @@ final class MaxScaleCdcTable(properties: util.Map[String, String])
   * schema lines, the recovered slice is verified to contain the same
   * number, and the source fails loudly instead of silently delivering
   * displaced rows to a transactional sink keyed on batch id.
+  *
+  * Every field is computed from what `drain()` decoded when the line
+  * arrived (the stream key and sequence kept beside each buffered
+  * line); the GTID string is built only when an offset is made.
   */
 final case class CdcOffset(index: Long, lastGtid: String, ddl: Long = -1L,
     marks: Map[String, Long] = Map.empty) extends Offset {
@@ -219,18 +233,28 @@ object CdcOffset {
 final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
     extends MicroBatchStream with SupportsAdmissionControl {
 
+  import MaxScaleCdcMicroBatchStream.Buffered
+
   private var transport: CdcTransport = _
   private var started = false
-  // Buffered lines with their absolute index [firstIndex, ...].
-  private val buffer = new ArrayBuffer[String]()
+  // Buffered lines with their absolute index [firstIndex, ...], each
+  // decoded once on arrival (drain).
+  private val buffer = mutable.ArrayDeque[Buffered]()
   private var firstIndex = 0L
-  private var lastGtid = ""
+  // Newest delivered DML line (null: none since the restore point,
+  // whose GTID is restoredGtid). Its GTID is built on demand.
+  private var lastDml: Buffered = _
+  private var restoredGtid = ""
+  private def lastGtid: String =
+    if (lastDml == null) restoredGtid else lastDml.gtid
+  // One shared "domain-server" key string per replication stream.
+  private val streamKeys = mutable.LongMap[String]()
   // Cumulative count of schema/DDL lines delivered since stream origin
   // (carried in CdcOffset.ddl — see the offset contract above).
   private var ddlCount = 0L
   // Per-(domain, server) high-water sequence of delivered DML, carried
   // in CdcOffset.marks (the multi-domain watermark map).
-  private val marks = scala.collection.mutable.Map[String, Long]()
+  private val marks = mutable.Map[String, Long]()
   // Dedupe thresholds captured at restore: a redelivered DML at or
   // below its OWN stream's ("domain-server") threshold is dropped.
   private var dedupe: Map[String, Long] = Map.empty
@@ -249,7 +273,7 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
   // offsets under ReadLimit.maxRows admission control.
   private var baseGtid = ""
   private var baseDdl = 0L
-  private val baseMarks = scala.collection.mutable.Map[String, Long]()
+  private val baseMarks = mutable.Map[String, Long]()
 
   private def ensureStarted(): Unit = synchronized {
     if (!started) {
@@ -259,7 +283,7 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
       }
       restore.foreach { o =>
         firstIndex = o.index
-        lastGtid = o.lastGtid
+        restoredGtid = o.lastGtid
         restoreDdl = o.ddl
         if (o.ddl >= 0) ddlCount = o.ddl
         dedupe =
@@ -283,10 +307,10 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
     transport.poll().foreach { line =>
       if (Protocol.isDmlEvent(line)) {
         val e = Protocol.decodeDmlEvent(line)
-        val key = s"${e.domain}-${e.serverId}"
+        val key = streamKey(e.domain, e.serverId)
         if (e.sequence > dedupe.getOrElse(key, Long.MinValue)) {
-          buffer += line
-          lastGtid = e.gtid
+          lastDml = Buffered(line, key, e.sequence)
+          buffer += lastDml
           marks(key) = math.max(marks.getOrElse(key, Long.MinValue),
             e.sequence)
         } // else: inclusive redelivery of an already-delivered event
@@ -302,11 +326,34 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
         val provableDup = recovering && restoreDdl >= 0 &&
           recoveryTarget.get.ddl == restoreDdl && restore.exists(_.lastGtid.nonEmpty)
         if (!provableDup) {
-          buffer += line
+          buffer += Buffered(line, null, 0L)
           ddlCount += 1
         }
       }
     }
+  }
+
+  private def streamKey(domain: Int, serverId: Int): String = {
+    val id = (domain.toLong << 32) | (serverId & 0xffffffffL)
+    val k = streamKeys.getOrNull(id)
+    if (k != null) k
+    else { val s = s"$domain-$serverId"; streamKeys(id) = s; s }
+  }
+
+  /** Fold the first `n` buffered lines into the watermark map `m`,
+    * starting from (`gtid`, `ddl`); returns (gtid, ddl) after them. */
+  private def foldPrefix(n: Int, gtid: String, ddl: Long,
+      m: mutable.Map[String, Long]): (String, Long) = {
+    var last: Buffered = null
+    var d = ddl
+    buffer.iterator.take(n).foreach { b =>
+      if (b.isDml) {
+        last = b
+        m(b.stream) = math.max(m.getOrElse(b.stream, Long.MinValue),
+          b.sequence)
+      } else d += 1
+    }
+    (if (last == null) gtid else last.gtid, d)
   }
 
   /** Record a checkpointed position as the resume point, if the
@@ -337,17 +384,8 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
     * mid-buffer index: replay the baseline state at firstIndex through
     * the buffered lines below `endIdx`. Only used for capped batches. */
   private def offsetAt(endIdx: Long): CdcOffset = {
-    var g = baseGtid
-    var d = baseDdl
-    val m = scala.collection.mutable.Map[String, Long](baseMarks.toSeq: _*)
-    buffer.take((endIdx - firstIndex).toInt).foreach { line =>
-      if (Protocol.isDmlEvent(line)) {
-        val ev = Protocol.decodeDmlEvent(line)
-        g = ev.gtid
-        val k = s"${ev.domain}-${ev.serverId}"
-        m(k) = math.max(m.getOrElse(k, Long.MinValue), ev.sequence)
-      } else d += 1
-    }
+    val m = baseMarks.clone()
+    val (g, d) = foldPrefix((endIdx - firstIndex).toInt, baseGtid, baseDdl, m)
     CdcOffset(endIdx, g, d, m.toMap)
   }
 
@@ -406,7 +444,8 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
         throw new java.io.IOException(
           s"stale batch request [$s,$e): lines before index $firstIndex " +
             "were already committed and dropped from the buffer")
-      val lines = buffer.slice((s - firstIndex).toInt, (e - firstIndex).toInt)
+      val batch = buffer.view.slice((s - firstIndex).toInt,
+        (e - firstIndex).toInt)
       // Recovered-batch stability check: when both offsets carry DDL
       // counts, the slice must contain exactly the schema lines the
       // original attempt delivered in [s,e) — otherwise a re-sent
@@ -415,14 +454,14 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
       // contents. Fail loudly rather than deliver displaced rows.
       if (startOff.ddl >= 0 && endOff.ddl >= 0) {
         val expected = endOff.ddl - startOff.ddl
-        val actual = lines.count(l => !Protocol.isDmlEvent(l)).toLong
+        val actual = batch.count(!_.isDml).toLong
         if (actual != expected)
           throw new java.io.IOException(
             s"batch [$s,$e) contains $actual schema lines but the " +
               s"planning attempt delivered $expected — refusing to " +
               "deliver displaced rows to a batch-id-keyed sink")
       }
-      Array(CdcInputPartition(lines.toArray))
+      Array(CdcInputPartition(batch.map(_.line).toArray))
     }
   }
 
@@ -436,22 +475,27 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
     val e = end.asInstanceOf[CdcOffset].index
     val drop = math.min((e - firstIndex).toInt, buffer.size)
     if (drop > 0) {
-      // advance the firstIndex baseline state over the dropped prefix
-      buffer.take(drop).foreach { line =>
-        if (Protocol.isDmlEvent(line)) {
-          val ev = Protocol.decodeDmlEvent(line)
-          baseGtid = ev.gtid
-          val k = s"${ev.domain}-${ev.serverId}"
-          baseMarks(k) =
-            math.max(baseMarks.getOrElse(k, Long.MinValue), ev.sequence)
-        } else baseDdl += 1
-      }
-      buffer.remove(0, drop)
+      // advance the firstIndex baseline state over the dropped prefix,
+      // then drop it in O(drop) (the deque does not shift the rest)
+      val (g, d) = foldPrefix(drop, baseGtid, baseDdl, baseMarks)
+      baseGtid = g
+      baseDdl = d
+      buffer.dropInPlace(drop)
     }
     firstIndex = math.max(firstIndex, e)
   }
 
   override def stop(): Unit = if (transport != null) transport.close()
+}
+
+object MaxScaleCdcMicroBatchStream {
+  /** A buffered line as decoded on arrival: `stream` is the shared
+    * "domain-server" key of a DML line (null for a schema line). */
+  private final case class Buffered(line: String, stream: String,
+      sequence: Long) {
+    def isDml: Boolean = stream != null
+    def gtid: String = s"$stream-$sequence"
+  }
 }
 
 final case class CdcInputPartition(lines: Array[String])

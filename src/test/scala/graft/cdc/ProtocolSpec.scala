@@ -158,6 +158,125 @@ class ProtocolSpec extends AnyFunSuite {
     assert(e.gtid == "0-3000-7")
   }
 
+  /** The tree decoder `decodeDmlEvent` used before the streaming scan
+    * (`readTree` + `path(key).asInt/asLong/asText`), kept as the
+    * oracle the scan must agree with. */
+  private object TreeDecoder {
+    private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def decode(line: String): CdcModel.DmlEvent = {
+      val n = mapper.readTree(line)
+      CdcModel.DmlEvent(
+        domain = n.path("domain").asInt(),
+        serverId = n.path("server_id").asInt(),
+        sequence = n.path("sequence").asLong(),
+        eventNumber = n.path("event_number").asInt(),
+        timestamp = n.path("timestamp").asLong(),
+        eventType = n.path("event_type").asText(),
+        tableName = n.path("table_name").asText(),
+        tableSchema = n.path("table_schema").asText(),
+        raw = line)
+    }
+  }
+
+  private def assertParity(line: String): CdcModel.DmlEvent = {
+    val e = Protocol.decodeDmlEvent(line)
+    assert(e == TreeDecoder.decode(line), s"decoders disagree on $line")
+    e
+  }
+
+  // A backslash, kept out of the literals so no escape is processed.
+  private val bs = "\\"
+
+  test("DML decode: the streaming scan equals the tree decoder") {
+    val golden = Seq(goldenDml,
+      """{"domain":0,"server_id":3000,"sequence":9,"event_number":2,"timestamp":1,"event_type":"update_after","table_name":"t","table_schema":"d","id":2,"name":"x","score":1.5,"ok":true,"missing":null}""")
+    val reordered =
+      """{"table_schema": "test", "id": 1, "sequence": 7, "event_type": "insert", "domain": 0, "timestamp": 1700000000, "table_name": "tests", "event_number": 1, "server_id": 3000}"""
+    val nestedUser =
+      """{"pre": {"domain": 9, "a": [1, {"sequence": 99}], "b": {}}, "list": [[], [{"server_id": 5}]], "domain": 1, "server_id": 3001, "sequence": 12, "event_number": 3, "timestamp": 1700000001, "event_type": "delete", "table_name": "tests", "table_schema": "test", "post": {"table_name": "no", "x": [true, null, 1.5e3]}, "tail": [{"event_type": "no"}]}"""
+    val containerUnderKey =
+      """{"domain": {"v": 1}, "server_id": [3000], "sequence": {"n": [7]}, "event_number": [], "timestamp": {}, "event_type": {"t": "insert"}, "table_name": ["tests"], "table_schema": {}, "id": 1}"""
+    val escaped =
+      s"""{"domain": 0, "server_id": 3000, "sequence": 7, "event_number": 1, "timestamp": 1, "event_type": "in${bs}"sert${bs}n", "table_name": "t${bs}u00e9st${bs}u2603${bs}ud83d${bs}ude00", "table_schema": "a${bs}${bs}b${bs}/c${bs}t", "note": "${bs}u0000${bs}"x${bs}""}"""
+    val quotedNumbers =
+      """{"domain": "1", "server_id": " 3000 ", "sequence": "42", "event_number": "x", "timestamp": "1.5e3", "event_type": 12, "table_name": -0, "table_schema": 2.50, "id": "7"}"""
+    val oddScalars =
+      """{"domain": 4294967297, "server_id": 1.9e10, "sequence": 123456789012345678901234567890, "event_number": true, "timestamp": -2.5, "event_type": false, "table_name": 1e300, "table_schema": 99999999999999999999, "id": 1}"""
+    val duplicated =
+      """{"domain": 0, "server_id": 1, "sequence": 1, "event_number": 1, "timestamp": 1, "event_type": "insert", "table_name": "a", "table_schema": "s", "sequence": 2, "table_name": "b", "domain": {"x": 1}, "server_id": 3000}"""
+    val absent = """{"domain": 0, "id": 1}"""
+    golden.foreach(assertParity)
+    assert(assertParity(reordered) == Protocol.decodeDmlEvent(goldenDml)
+      .copy(raw = reordered))
+    val n = assertParity(nestedUser)
+    assert((n.domain, n.serverId, n.sequence) == ((1, 3001, 12L)))
+    assert((n.eventType, n.tableName) == (("delete", "tests")))
+    val c = assertParity(containerUnderKey)
+    assert((c.domain, c.serverId, c.sequence, c.eventType) == ((0, 0, 0L, "")))
+    val e = assertParity(escaped)
+    assert(e.eventType == "in\"sert\n" && e.tableSchema == "a\\b/c\t")
+    assert(e.tableName == "t\u00e9st\u2603\ud83d\ude00")
+    val q = assertParity(quotedNumbers)
+    assert((q.domain, q.sequence, q.eventNumber) == ((1, 42L, 0)))
+    assert(q.eventType == "12" && q.tableName == "0" && q.tableSchema == "2.5")
+    assertParity(oddScalars)
+    val d = assertParity(duplicated)
+    assert((d.domain, d.serverId, d.sequence, d.tableName) ==
+      ((0, 3000, 2L, "b")), "the last of a repeated key wins")
+    val a = assertParity(absent)
+    assert((a.serverId, a.sequence, a.eventType, a.tableName) == ((0, 0L, "", "")))
+  }
+
+  test("DML decode: a JSON null under a text key reads as \"null\", as the tree decoder did") {
+    val line = """{"domain": 0, "server_id": 3000, "sequence": null, "event_number": 1, "timestamp": 1, "event_type": null, "table_name": null, "table_schema": null}"""
+    val e = assertParity(line)
+    assert(e.eventType == "null" && e.tableName == "null" &&
+      e.tableSchema == "null")
+    assert(e.sequence == 0L)
+  }
+
+  test("DML decode: malformed JSON throws, as the tree decoder did") {
+    val bad = Seq(
+      """{"domain": 0, "server_id": 3000""",
+      """{"domain": 0 "server_id": 3000}""",
+      """{"domain": 0, "server_id": 3000, "user": {"a": [1, 2}}""",
+      s"""{"domain": 0, "event_type": "bad ${bs}q escape"}""",
+      """{"domain": 0, server_id: 3000}""",
+      """{"domain": 0, "note": "unterminated}""")
+    bad.foreach { l =>
+      intercept[com.fasterxml.jackson.core.JsonProcessingException](
+        TreeDecoder.decode(l))
+      intercept[com.fasterxml.jackson.core.JsonProcessingException](
+        Protocol.decodeDmlEvent(l))
+    }
+  }
+
+  test("DML decode: generated envelopes decode like the tree decoder") {
+    import com.fasterxml.jackson.core.io.JsonStringEncoder
+    def quote(s: String) =
+      "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
+    val scalar: Gen[String] = Gen.oneOf(
+      Gen.chooseNum(Long.MinValue, Long.MaxValue).map(_.toString),
+      Gen.chooseNum(Int.MinValue, Int.MaxValue).map(_.toString),
+      Gen.chooseNum(-1e12, 1e12).map(_.toString),
+      Gen.chooseNum(0L, 1L << 40).map(n => quote(n.toString)),
+      Gen.asciiPrintableStr.map(quote),
+      Gen.oneOf("true", "false", "null", "123456789012345678901234567890"))
+    val value: Gen[String] = Gen.frequency(
+      8 -> scalar,
+      1 -> Gen.listOfN(2, scalar).map(_.mkString("[", ",", "]")),
+      1 -> Gen.zip(Gen.oneOf(CdcModel.MetadataKeys), scalar)
+        .map { case (k, v) => s"""{"$k":{"in":[$v]},"k":$v}""" })
+    val field: Gen[String] = Gen.zip(
+      Gen.frequency(3 -> Gen.oneOf(CdcModel.MetadataKeys),
+        1 -> Gen.alphaLowerStr), value)
+      .map { case (k, v) => s"${quote(k)}: $v" }
+    check(Prop.forAll(Gen.listOf(field)) { fields =>
+      val line = fields.mkString("{", ", ", "}")
+      Protocol.decodeDmlEvent(line) == TreeDecoder.decode(line)
+    })
+  }
+
   test("tableData strips exactly the 8 envelope keys") {
     assert(Protocol.tableData(goldenDml) == Map("id" -> 1))
     val multi =

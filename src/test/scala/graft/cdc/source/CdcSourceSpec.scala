@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 import graft.LocalSpark
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -331,6 +332,59 @@ class CdcSourceSpec extends AnyFunSuite {
       .select("sequence").collect().map(_.getLong(0)).sorted.toSeq
     assert(seqs == (7L to 16L), s"every DML exactly once, got $seqs")
     assert(out.count() == 11)
+  }
+
+  test("capped offsets and commits equal the offsets computed from the capture") {
+    // Two replication domains with their own sequence counters, and the
+    // schema re-sent half-way. Each line is listed with the (stream
+    // key, sequence) it carries, or None for a schema line.
+    val dmls = (1 to 40).map { i =>
+      val (d, sv, q) = if (i % 3 == 0) (1, 3001, 10 + i) else (0, 3000, 700 + i)
+      s"""{"domain": $d, "server_id": $sv, "sequence": $q, "event_number": 1, "timestamp": 1700000000, "event_type": "insert", "table_name": "tests", "table_schema": "test", "id": $i}""" ->
+        Option((s"$d-$sv", q.toLong))
+    }
+    val feed = Seq(ddl -> None) ++ dmls.take(20) ++ Seq(ddl -> None) ++
+      dmls.drop(20)
+    val f = Files.createTempFile("cdc-offsets", ".ndjson")
+    Files.write(f, feed.map(_._1).mkString("\n").getBytes(UTF_8))
+
+    // The offset after the first n lines: last GTID, schema-line count
+    // and per-stream high-water sequences, in the offset log's format.
+    def expected(n: Int): String = {
+      val prefix = feed.take(n)
+      val seen = prefix.flatMap(_._2)
+      val gtid = seen.lastOption.fold("") { case (k, q) => s"$k-$q" }
+      val marks = seen.groupMapReduce(_._1)(_._2)(math.max).toSeq.sorted
+        .map { case (k, q) => s""""$k":$q""" }
+      val m = if (marks.isEmpty) "" else marks.mkString(""","marks":{""", ",", "}")
+      s"""{"n":$n,"gtid":"$gtid","ddl":${prefix.count(_._2.isEmpty)}$m}"""
+    }
+
+    for (k <- Seq(1, 2, 3, 7, 20, 100)) {
+      val stream = new MaxScaleCdcMicroBatchStream(Map("replayfile" -> f.toString))
+      try {
+        var start = stream.initialOffset().asInstanceOf[CdcOffset]
+        assert(start.json == expected(0))
+        while (start.index < feed.length) {
+          val end = stream.latestOffset(start, ReadLimit.maxRows(k))
+            .asInstanceOf[CdcOffset]
+          val n = end.index.toInt
+          assert(n == math.min(start.index.toInt + k, feed.length))
+          assert(end.json == expected(n), s"maxRows($k) at $n")
+          val lines = stream.planInputPartitions(start, end)
+            .flatMap(_.asInstanceOf[CdcInputPartition].lines).toSeq
+          assert(lines == feed.slice(start.index.toInt, n).map(_._1))
+          stream.commit(end)
+          start = end
+        }
+        // the uncapped offset past the last commit agrees as well
+        assert(stream.latestOffset(start, ReadLimit.allAvailable()).json ==
+          expected(feed.length))
+        // a committed range is gone: asking for it again fails loudly
+        intercept[java.io.IOException](stream.planInputPartitions(
+          CdcOffset(0L, "", 0L), start))
+      } finally stream.stop()
+    }
   }
 
   test("replay: multi-domain restart dedupes per (domain, server) watermark") {
