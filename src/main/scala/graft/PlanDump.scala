@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` output for the named queries to
   * <out>/<query>_<tag>.txt — the plan evidence files the optimization
@@ -18,14 +17,7 @@ object PlanDump {
     val names =
       if (args.contains("-all")) SparkEntry.queries.keys.toSeq.sorted
       else args.filterNot(_.startsWith("-")).toSeq
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(Tables.NanosKey, "true")
-      .config(Tables.NtzKey, "false")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
     for (name <- names) {

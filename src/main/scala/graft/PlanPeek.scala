@@ -1,15 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object PlanPeek {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions","4")
-.config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(Tables.NanosKey, "true")
-      .config(Tables.NtzKey, "false")
-      .config("spark.ui.enabled","false").getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     println(SparkEntry.queries(args(0))(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString.take(3000))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Build an ORGANIC mid-scale oracle corpus by deterministic doc-level
@@ -31,15 +30,7 @@ object SampleDown {
     val outDir = if (args.length > 1) args(1) else "target/sf03org"
     val num = if (args.length > 2) args(2).toInt else 3
     val denom = if (args.length > 3) args(3).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(Tables.NanosKey, "true")
-      .config(Tables.NtzKey, "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
 
     def sample(name: String, id: String): Unit = {

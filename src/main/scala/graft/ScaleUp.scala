@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-shaped dataset from the driver's sf0.1 testdata
@@ -39,15 +39,7 @@ object ScaleUp {
       if (args.length > 3) Some(args(3).split(',').map(_.trim).toSet)
       else None
     def wanted(name: String): Boolean = only.forall(_.contains(name))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(Tables.NanosKey, "true")
-      .config(Tables.NtzKey, "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(32)
     spark.sparkContext.setLogLevel("WARN")
 
     def replicate(name: String)(shift: (DataFrame, Int) => DataFrame): Unit = {

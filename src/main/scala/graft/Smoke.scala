@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Degenerate-input sweep: run every registered query against a
   * dataset dir (typically EMPTY or near-empty tables) and report
@@ -11,16 +10,7 @@ object Smoke {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val only = args.lift(1).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(Tables.NanosKey, "true")
-      .config(Tables.NtzKey, "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     var bad = 0
     SparkEntry.queries

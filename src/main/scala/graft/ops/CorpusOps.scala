@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,17 +38,10 @@ object CorpusOps extends OpPack {
     * leg. The frame is bounded by |sources| × distinct grams — far
     * smaller than the token stream — and the helper shape lets
     * CacheManager substitute the one cached plan into every equal
-    * subplan (the DedupOps.tokens idiom). */
-  private val sourceGramsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.DataFrame]
-
+    * subplan. */
   private def sourceGrams(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    // memoized per (session, corpus) — optimization r13 (ADVICE r12):
-    // the un-memoized form built and persisted a NEW DataFrame per
-    // invocation, leaning on CacheManager plan equality for the no-op
-    // and re-planning the build tree per call
-    sourceGramsCache.getOrElseUpdate((SessionKey(s), dir),
+    SessionMemo(s, ("corpus.sourceGrams", dir))(
       Tables(s, dir, "documents")
         .withColumn("toks", split(col("text"), " "))
         .select(col("source"),

@@ -1,7 +1,7 @@
 package graft.ops
 import graft.Lineage.LineageOps
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.{MinHashLsh, SimHash}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -37,20 +37,16 @@ object DedupOps extends OpPack {
   // on cached data). The checkpoint truncates the lineage to a
   // LogicalRDD, so consumers plan against a leaf. Blocks live in the
   // block manager exactly like the old persist (MEMORY_AND_DISK).
-  private val tokensCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
   private def tokens(s: SparkSession, dir: String): DataFrame =
-    tokensCache.getOrElseUpdate((SessionKey(s), dir),
+    SessionMemo(s, ("dedup.tokens", dir))(
       Tables(s, dir, "documents")
         .select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("w"))
         .filter(col("w") =!= "")
         .lineageCut(false))
 
-  private val shinglesCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
   private def shingles(s: SparkSession, dir: String): DataFrame =
-    shinglesCache.getOrElseUpdate((SessionKey(s), dir),
+    SessionMemo(s, ("dedup.shingles", dir))(
       Tables(s, dir, "documents")
         .withColumn("arr", split(col("text"), " "))
         .filter(size(col("arr")) >= 3)
@@ -97,22 +93,14 @@ object DedupOps extends OpPack {
     * Hot-gram removal is one aggregation on the (cached) index plus a
     * key-co-partitioned anti-join; persisted because the pair join
     * reads it three times (a-side, b-side, sizes). */
-  private val shinglesCappedCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
   private def shinglesCapped(s: SparkSession, dir: String): DataFrame =
-    shinglesCappedCache.getOrElseUpdate((SessionKey(s), dir), {
+    SessionMemo(s, ("dedup.shinglesCapped", dir)) {
       val sh = shingles(s, dir)
       val hot = sh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
         .filter(col("df") > DfCap).select(col("sh"))
       sh.join(hot, Seq("sh"), "left_anti")
         .lineageCut(false)
-    })
-
-  /** Session-memoized MinHash band-signature index (see
-    * llm_dedup_minhash) — keyed by session identity so a fresh
-    * session never sees frames from a stopped one. */
-  private val bandSigCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
+    }
 
   def queries: Map[String, Q] = Map(
     // MinHash(128) + 32-band LSH over df-capped 3-gram shingles,
@@ -134,8 +122,7 @@ object DedupOps extends OpPack {
       // index a production pipeline pays once and serves many dedup
       // passes from — repeated queries ride the tiny persisted index
       // and pay only the band join + exact verify.
-      val bs = bandSigCache.getOrElseUpdate(
-        (SessionKey(s), dir),
+      val bs = SessionMemo(s, ("dedup.bandSig", dir))(
         MinHashLsh.bandSignatures(sh, "doc_id", "sh",
           numHashes = 128, bands = 32)
           .lineageCut(false))
@@ -1245,10 +1232,8 @@ object DedupOps extends OpPack {
     * [[DfCap]]): sizes, intersections and thresholds are all computed
     * over grams with df ≤ K, which is what keeps the self-join
     * sub-quadratic regardless of boilerplate. */
-  private val pairCountsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
   private def pairCounts(s: SparkSession, dir: String): DataFrame =
-    pairCountsCache.getOrElseUpdate((SessionKey(s), dir), {
+    SessionMemo(s, ("dedup.pairCounts", dir)) {
       val sh = shinglesCapped(s, dir)
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
       val a = sh.select(col("doc_id").as("doc_a"), col("sh"))
@@ -1261,19 +1246,16 @@ object DedupOps extends OpPack {
         .join(sizes.select(col("doc_id").as("doc_b"), col("n_sh").as("n_b")),
           "doc_b")
         .lineageCut(false)
-    })
+    }
 
   /** Min-label CC assignments over the near-dup graph, memoized per
     * (session, dir) and persisted — the propagation loop runs Spark
     * actions driver-side, so CacheManager plan substitution alone
-    * cannot dedupe repeat calls (same pattern as LlmOps.ivfIndex).
-    * cluster/keep share this; llm_cc_bigstar deliberately keeps its
-    * own BigStarCC run — being a second, independent algorithm is the
-    * point of that query. */
-  private val ccCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
+    * cannot dedupe repeat calls. cluster/keep share this;
+    * llm_cc_bigstar deliberately keeps its own BigStarCC run — being
+    * a second, independent algorithm is the point of that query. */
   private def ccLabels(s: SparkSession, dir: String): DataFrame =
-    ccCache.getOrElseUpdate((SessionKey(s), dir),
+    SessionMemo(s, ("dedup.cc", dir))(
       graft.operators.ConnectedComponents
         .run(nearDupPairs(s, dir), "doc_a", "doc_b")
         .withColumnRenamed("id", "doc_id")

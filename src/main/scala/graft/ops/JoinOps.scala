@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Tables.{moneySum, exprSum}
 import graft.operators.AsOfJoin
 import org.apache.spark.sql.expressions.Window
@@ -25,17 +25,11 @@ object JoinOps extends OpPack {
 
   /** composite_basket's distinct (order, part) frame as a shared
     * helper + persist (optimization r12): equal subplans across the
-    * four consumers resolve to ONE cached relation (the
-    * DedupOps.tokens idiom) instead of four scan+distinct chains. */
-  private val basketItemsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), org.apache.spark.sql.DataFrame]
-
+    * four consumers resolve to ONE cached relation instead of four
+    * scan+distinct chains. */
   private def basketItems(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    // memoized per (session, corpus) — optimization r13 (ADVICE r12):
-    // one plan object per session instead of a fresh build tree per
-    // invocation resolved by CacheManager plan equality
-    basketItemsCache.getOrElseUpdate((SessionKey(s), dir),
+    SessionMemo(s, ("join.basketItems", dir))(
       Tables(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .distinct()

@@ -1,7 +1,7 @@
 package graft.ops
 import graft.Lineage.LineageOps
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Tables.moneyAvg
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -28,14 +28,10 @@ object LlmOps extends OpPack {
     * Spark actions, so CacheManager plan substitution alone cannot
     * dedupe two `buildIndex` calls; this memo makes every query
     * against the same (session, corpus, numCells) reuse one built,
-    * persisted index. Keyed by session identity so a fresh session
-    * never sees frames from a stopped one. */
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), graft.operators.AnnIvf.IvfIndex]
-
+    * persisted index. */
   private def ivfIndex(s: SparkSession, dir: String,
       numCells: Int): graft.operators.AnnIvf.IvfIndex =
-    ivfCache.getOrElseUpdate((SessionKey(s), dir, numCells), {
+    SessionMemo(s, ("llm.ivf", dir, numCells)) {
       val e = Tables(s, dir, "embeddings")
       val built = graft.operators.AnnIvf.buildIndex(e, "vec_id", "embedding",
         numCells)
@@ -44,7 +40,7 @@ object LlmOps extends OpPack {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
         built.centroids
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    }
 
   /** Cosine similarity in double precision, left-to-right accumulation
     * (matches DuckDB's list_cosine_similarity evaluation order).
@@ -52,9 +48,8 @@ object LlmOps extends OpPack {
   private def cosine(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.cosineSim(a, b)
 
-  // Persisted: the near-dup query reads this token index four times
-  // (pair generation twice, sizes, verification) — see the note in
-  // DedupOps; CacheManager substitutes the cache into equal subplans.
+  // Persisted only while [[tokensCapped]] is built, which reads it
+  // twice (the df agg and the anti-join).
   private def tokens(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
@@ -64,31 +59,24 @@ object LlmOps extends OpPack {
 
   /** The df-capped token index llm_dedup_near rides (same shape as
     * DedupOps.shinglesCapped): hot-token removal is one aggregation on
-    * the cached index plus an anti-join. Built by a shared helper — not
-    * inline in the query closure — so repeated invocations resolve to
-    * the ONE cached plan (CacheManager dedupes the equal subplan)
-    * instead of re-registering a per-invocation persist. */
-  private val tokensCappedCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
+    * the cached index plus an anti-join. Memoized per (session,
+    * corpus) so repeated invocations return the SAME frame. */
   private def tokensCapped(s: SparkSession, dir: String): DataFrame =
-    // Memoized per (session, corpus) so repeated invocations return
-    // the SAME persisted frame (stable cache entries across runs)
-    // instead of registering a fresh persist each call.
-    tokensCappedCache.getOrElseUpdate(
-      (SessionKey(s), dir), {
-        val t0 = tokens(s, dir)
-        val hot = t0.groupBy(col("lang"), col("source"), col("w"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") > DedupOps.DfCap)
-          .select(col("lang"), col("source"), col("w"))
-        // localCheckpoint (lazy) rather than persist — same block-
-        // manager caching, but the lineage is truncated so every
-        // consumer plans against a leaf instead of re-optimizing the
-        // full build tree per run (optimization r12, see DedupOps).
-        t0.join(hot, Seq("lang", "source", "w"), "left_anti")
-          .lineageCut(false)
-      })
+    SessionMemo(s, ("llm.tokensCapped", dir)) {
+      val t0 = tokens(s, dir)
+      val hot = t0.groupBy(col("lang"), col("source"), col("w"))
+        .agg(count(lit(1)).as("df"))
+        .filter(col("df") > DedupOps.DfCap)
+        .select(col("lang"), col("source"), col("w"))
+      // An eager cut rather than persist: the lineage is truncated so
+      // every consumer plans against a leaf instead of re-optimizing
+      // the full build tree per run (see DedupOps), and it is eager so
+      // the token index can be released as soon as the cut holds.
+      val capped = t0.join(hot, Seq("lang", "source", "w"), "left_anti")
+        .lineageCut(true)
+      t0.unpersist()
+      capped
+    }
 
   /** The exact integer covariance cell frame shared by `llm_vec_cov`
     * (which hash-oracles it) and the PCA pair (`llm_pca_exact`
@@ -103,12 +91,8 @@ object LlmOps extends OpPack {
     * shares ONE persisted <=2,080-cell frame, so the corpus is
     * scanned ONCE per run, not once per family member (at 100 TB,
     * the difference between one pass and three). */
-  private val covCellsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
   private def covCells(s: SparkSession, dir: String): DataFrame =
-    covCellsCache.getOrElseUpdate(
-      (SessionKey(s), dir),
+    SessionMemo(s, ("llm.covCells", dir))(
       // localCheckpoint (lazy): same caching as the old persist, but
       // the ≤2,080-cell frame becomes a plan LEAF — consumers stop
       // re-optimizing the corpus-explode build tree per run (r12).
@@ -120,12 +104,8 @@ object LlmOps extends OpPack {
     * the one corpus scan) instead of each re-deriving it. The result
     * is a 64-row LocalRelation — safe to reuse across queries within
     * a session. */
-  private val pcaExactCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
   private def pcaExactCached(s: SparkSession, dir: String): DataFrame =
-    pcaExactCache.getOrElseUpdate(
-      (SessionKey(s), dir), pcaExact(s, covCells(s, dir)))
+    SessionMemo(s, ("llm.pcaExact", dir))(pcaExact(s, covCells(s, dir)))
 
   private[graft] def covCellsOf(embeddings: DataFrame): DataFrame =
     embeddings

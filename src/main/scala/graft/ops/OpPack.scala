@@ -10,22 +10,6 @@ trait OpPack {
   def oracle: Map[String, String]
 }
 
-/** Session-memoization key (optimization r13, ADVICE r12): a UUID
-  * assigned per session OBJECT via a weak identity map — unique for
-  * every live session and never reused — where the previous
-  * `System.identityHashCode(session)` could collide between live
-  * sessions and be reassigned after a GC, letting a fresh session be
-  * served frames bound to a stopped one. (Spark's own sessionUUID is
-  * `private[sql]`, hence the local equivalent.) Weak keys mean a
-  * collected session's entry vanishes instead of aliasing. */
-private[ops] object SessionKey {
-  private val ids =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, String]())
-  def apply(s: SparkSession): String =
-    ids.computeIfAbsent(s, _ => java.util.UUID.randomUUID().toString)
-}
-
 /** Shared SQL fragments over a tokenized `toks` array column. */
 private[ops] object Grams {
   /** Spark SQL: array of space-joined word n-grams of `toks`.

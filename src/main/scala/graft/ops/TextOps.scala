@@ -1,7 +1,7 @@
 package graft.ops
 import graft.Lineage.LineageOps
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -35,12 +35,9 @@ object TextOps extends OpPack {
     * which previously re-tokenized the corpus twice (profile build +
     * scoring join). The persisted frame is narrow and bounded —
     * one row per (doc, candidate language with profile hits), ≤
-    * |docs|·|langs|. Same TrieMap idiom as LlmOps.covCells. */
-  private val langHitsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
+    * |docs|·|langs|. */
   private[ops] def langHits(s: SparkSession, dir: String): DataFrame =
-    langHitsCache.getOrElseUpdate((SessionKey(s), dir), {
+    SessionMemo(s, ("text.langHits", dir)) {
       val t = toks(s, dir)
       val wp = Window.partitionBy(col("lang"))
         .orderBy(desc("freq"), asc("w"))
@@ -54,7 +51,7 @@ object TextOps extends OpPack {
         .groupBy(col("doc_id"), col("cand_lang"))
         .agg(count(lit(1)).as("hits"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    }
 
   private[ops] def langPred(s: SparkSession, dir: String): DataFrame = {
     val wd = Window.partitionBy(col("doc_id"))
@@ -260,12 +257,9 @@ object TextOps extends OpPack {
     * through the CROSS JOIN and every later round — mirrored by the
     * limit(0) branch; replace() is the same left-to-right
     * non-overlapping literal replace in both engines. */
-  private val bpeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (DataFrame, DataFrame)]
-
   private def bpeChain(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    bpeCache.getOrElseUpdate((SessionKey(s), dir), {
+    SessionMemo(s, ("text.bpe", dir)) {
       val words = Tables(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("word"))
         .filter(col("word") =!= "")
@@ -311,7 +305,7 @@ object TextOps extends OpPack {
       val mergesDf = merges.toSeq
         .toDF("round", "merge_left", "merge_right", "cnt")
       (mergesDf, seg)
-    })
+    }
 
   def queries: Map[String, Q] = Map(
     "llm_bpe_train" -> ((s, dir) => {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 
 /** The remaining TPC-H-shaped composites (Q2/Q6/Q9/Q11/Q12/Q13/Q14/
   * Q15/Q17/Q19/Q20/Q21/Q22), adapted to the reduced testdata star
@@ -50,13 +50,9 @@ object TpchOps extends OpPack {
     * gate and the winner join), q9 and q11, so the fact-table scan +
     * (partkey, suppkey) shuffle is paid once per session instead of
     * once per consumer plan — the production posture where partsupp
-    * is a maintained table, not a per-query derivation. Same TrieMap
-    * idiom as LlmOps.covCells / DedupOps.ccLabels. */
-  private val partsuppCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), DataFrame]
-
+    * is a maintained table, not a per-query derivation. */
   private def partsupp(s: SparkSession, dir: String): DataFrame =
-    partsuppCache.getOrElseUpdate((SessionKey(s), dir),
+    SessionMemo(s, ("tpch.partsupp", dir))(
       Tables(s, dir, "lineitem")
         .select(col("l_partkey").as("ps_partkey"),
           col("l_suppkey").as("ps_suppkey"),

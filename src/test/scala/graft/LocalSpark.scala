@@ -6,17 +6,7 @@ import org.apache.spark.sql.SparkSession
   * building a session per suite would dominate test time). */
 object LocalSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-.config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.NanosKey, "true")
-      .config(Tables.NtzKey, "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSession(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
