@@ -690,26 +690,27 @@ object ManifestSink {
     *
     * Mechanics: the scan's hidden `withRowMeta` columns give every
     * live row its physical (file, ordinal) address; the filtered
-    * addresses are shuffled per-file and written from EXECUTORS
-    * (positions-per-file is bounded by file row count — the same
-    * boundedness argument as Iceberg DVs); only (file, count, crc)
-    * metadata reaches the driver commit. Because the scan hides
-    * already-deleted rows, successive DELETEs produce DISJOINT
-    * position sets — counts stay additive, and the manifest's live
-    * row count stays exact (COUNT(*) pushdown included). The commit
-    * archives the prior snapshot first, so time travel still reads
-    * the pre-delete state; streaming epoch manifests are folded into
-    * the new base and left behind as EMPTY tombstones (the epoch-id
-    * idempotence token survives — a crash-replayed epoch still finds
-    * its manifest and discards its duplicate files, but can no longer
-    * double-count the folded rows).
+    * addresses are written from EXECUTORS by the scan tasks
+    * themselves (see [[commitDeletes]]; positions-per-file is bounded
+    * by file row count — the same boundedness argument as Iceberg
+    * DVs); only (file, count, crc) metadata reaches the driver
+    * commit. Because the scan hides already-deleted rows, successive
+    * DELETEs produce DISJOINT position sets — counts stay additive,
+    * and the manifest's live row count stays exact (COUNT(*) pushdown
+    * included). The commit archives the prior snapshot first, so time
+    * travel still reads the pre-delete state; streaming epoch
+    * manifests are folded into the new base and left behind as EMPTY
+    * tombstones (the epoch-id idempotence token survives — a
+    * crash-replayed epoch still finds its manifest and discards its
+    * duplicate files, but can no longer double-count the folded
+    * rows).
     *
     * Returns the number of rows deleted (0 → no-op, no new
     * snapshot). */
   def delete(spark: org.apache.spark.sql.SparkSession, dir: String,
       condition: String): Long = {
     import org.apache.spark.sql.functions.col
-    commitDeletes(spark, dir,
+    commitDeletes(dir,
       spark.read.format("graft-manifest")
         .option("withRowMeta", "true").load(dir)
         .filter(condition)
@@ -731,7 +732,16 @@ object ManifestSink {
     * after the delete snapshot commits — a self-referential source
     * would see its own rows masked; feed it a materialized frame
     * instead). Returns (rows updated-in-place i.e. masked, rows
-    * appended). */
+    * appended).
+    *
+    * The source is evaluated exactly TWICE: once for the semi-join
+    * keys, once for the append. The keys are not de-duplicated — a
+    * LEFT SEMI join emits each target row at most once however often
+    * its key repeats on the right. The appended row count is not a
+    * third `count()` job either: it is the sum of `rows` over the
+    * head manifest's entries stamped with the append's own sequence
+    * number (`seq == version`), exact metadata the commit already
+    * wrote. */
   def merge(spark: org.apache.spark.sql.SparkSession, dir: String,
       source: org.apache.spark.sql.DataFrame,
       keyCols: Seq[String]): (Long, Long) = {
@@ -739,12 +749,12 @@ object ManifestSink {
     val meta = spark.read.format("graft-manifest")
       .option("withRowMeta", "true").load(dir)
     val addr = meta
-      .join(source.select(keyCols.map(col): _*).distinct(), keyCols,
-        "left_semi")
+      .join(source.select(keyCols.map(col): _*), keyCols, "left_semi")
       .select(col(MetaFileCol).as("_1"), col(MetaPosCol).as("_2"))
-    val nDel = commitDeletes(spark, dir, addr)
-    val nIns = source.count()
+    val nDel = commitDeletes(dir, addr)
     source.write.mode("append").format("graft-manifest").save(dir)
+    val head = readManifest(dir)
+    val nIns = head.files.filter(_.seq.contains(head.version)).map(_.rows).sum
     (nDel, nIns)
   }
 
@@ -774,7 +784,7 @@ object ManifestSink {
       .option("withRowMeta", "true").load(dir)
       .filter(condition)
       .lineageCut(true) // freeze: addresses + payload from ONE scan
-    val n = commitDeletes(spark, dir,
+    val n = commitDeletes(dir,
       matched.select(col(MetaFileCol).as("_1"), col(MetaPosCol).as("_2")))
     if (n > 0) {
       val rewritten = matched.select(schema.fields.map { f =>
@@ -1208,20 +1218,32 @@ object ManifestSink {
       }
 
   /** Shared DELETE commit core: `hits` is a frame of (_1 = data file
-    * name, _2 = physical row ordinal) addresses to mask. */
-  private def commitDeletes(spark: org.apache.spark.sql.SparkSession,
-      dir: String, hits: org.apache.spark.sql.DataFrame): Long = {
-    import org.apache.spark.sql.functions.col
+    * name, _2 = physical row ordinal) addresses to mask, each address
+    * at most once.
+    *
+    * Every input partition of `hits` writes ONE delete file per (data
+    * file, partition) it holds hits for; only (data file, delete file,
+    * count, crc) reaches the driver. No shuffle gathers a file's hits
+    * first: a manifest scan never splits a file, so when no exchange
+    * sits between the scan and `hits` (DELETE, UPDATE, a broadcast
+    * semi-join MERGE) each file's hits already arrive in one
+    * partition. After a shuffled join one data file can get several
+    * delete files in one commit — the format allows that
+    * (`Entry.deletes` is a list, [[Entry.liveRows]] sums it, and the
+    * positions stay disjoint because each address occurs once in
+    * `hits`). The job runs over `queryExecution.toRdd`, not a typed
+    * `Dataset` collect, whose result path allocates a 1 MiB output
+    * chunk per task — and here every scan task is a result task. */
+  private def commitDeletes(dir: String,
+      hits: org.apache.spark.sql.DataFrame): Long = {
     val merged = readAll(dir)
-    import spark.implicits._
-    val written: Array[(String, String, Long, Long)] = hits.as[(String, Long)]
-      .repartition(col("_1"))
-      .mapPartitions { it =>
+    val written: Array[(String, String, Long, Long)] =
+      hits.queryExecution.toRdd.mapPartitions { it =>
         val byFile = scala.collection.mutable.LinkedHashMap
           .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-        it.foreach { case (f, p) =>
-          byFile.getOrElseUpdate(f,
-            scala.collection.mutable.ArrayBuffer.empty[Long]) += p
+        it.foreach { r =>
+          byFile.getOrElseUpdate(r.getUTF8String(0).toString,
+            scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
         }
         byFile.iterator.map { case (dataFile, ps) =>
           val name = s"$dataFile.${UUID.randomUUID()}$DelSuffix"
@@ -2362,13 +2384,6 @@ final class ManifestFileWriter(schema: StructType, path: String,
   private val fileCrc = new CRC32()
   private val out = new DataOutputStream(new CheckedOutputStream(
     new BufferedOutputStream(new FileOutputStream(file)), fileCrc))
-  // one single-field extractor per column: generic over every Spark
-  // type (nested included) without a per-type codec
-  private val fieldProj: Array[UnsafeProjection] =
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      UnsafeProjection.create(
-        Seq[Expression](BoundReference(i, f.dataType, f.nullable)))
-    }
   // Per-column field encoders (optimization r13, guide §1.2 "per-task
   // work"): the generic path paid, per row and column, an
   // UnsafeProjection call + a getBytes COPY + a DataOutputStream
@@ -2377,8 +2392,8 @@ final class ManifestFileWriter(schema: StructType, path: String,
   // 16-byte single-field UnsafeRow (8B null bitset + 8B value slot,
   // native byte order — byte-for-byte what UnsafeRowWriter emits)
   // plus the 4-byte big-endian length prefix into ONE reusable 20-byte
-  // buffer written (and CRC'd) in a single call; var-length columns
-  // keep the projection but stream the row's bytes directly
+  // buffer written (and CRC'd) in a single call; only var-length
+  // columns build a projection, and they stream the row's bytes directly
   // (UnsafeRow.writeToStream) instead of copying them out first. The
   // on-disk format is UNCHANGED. Each encoder returns the bytes it
   // appended so the page-size check is a running counter, not a
@@ -2432,8 +2447,12 @@ final class ManifestFileWriter(schema: StructType, path: String,
             Platform.putFloat(b, OFF + 12L, v)
           })
         case _ =>
+          // a single-field extractor: generic over every var-length
+          // Spark type (nested included) without a per-type codec
+          val proj = UnsafeProjection.create(
+            Seq[Expression](BoundReference(i, f.dataType, f.nullable)))
           (r: InternalRow) => {
-            val u = fieldProj(i)(r)
+            val u = proj(r)
             val n = u.getSizeInBytes
             colOuts(i).writeInt(n)
             u.writeToStream(colOuts(i), writeToStreamBuf)
