@@ -1,5 +1,6 @@
 package graft
 
+import graft.cdc.CdcPayloadRule
 import graft.functions.{DotProduct, FreqItemsAgg, KllDoublesAgg, L2DistanceSq, MinHashSignature, PqAdcL1, ThetaSketchAgg}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -8,7 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session-extension entry point: registers the engine's native
   * catalyst expressions in the SQL function registry, so
   * `spark.sql("... dot_product(a, b) ...")` works anywhere the
-  * DataFrame helpers (`graft.functions.VectorFunctions`) do.
+  * DataFrame helpers (`graft.functions.VectorFunctions`) do, and
+  * installs one optimizer rule: [[graft.cdc.CdcPayloadRule]], which
+  * parses `from_json` over a `maxscale-cdc` relation's `raw` column
+  * from its UTF-8 bytes (pre-CBO, after Spark's JSON schema pruning).
   *
   * Wire up with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` at
@@ -17,6 +21,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPreCBORule(_ => CdcPayloadRule)
+
     ext.injectFunction((
       new FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),

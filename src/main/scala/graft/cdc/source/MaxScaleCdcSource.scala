@@ -40,10 +40,11 @@ import scala.collection.mutable
   *
   * Output schema = the DML envelope (SURVEY.md §1.2) + `raw`
   * (verbatim event JSON, payload projectable with `from_json(raw,
-  * Protocol.inferSchema(ddl))`). DDL events are emitted as rows with
-  * `event_type = "ddl"` and a null envelope — schema-first, exactly
-  * as the reference delivers them on the channel
-  * (`client_test.go:135-137`).
+  * Protocol.inferSchema(ddl))`, which `graft.cdc.CdcPayloadRule`
+  * rewrites to parse the row's UTF-8 bytes). DDL events are emitted
+  * as rows with `event_type = "ddl"` and a null envelope —
+  * schema-first, exactly as the reference delivers them on the
+  * channel (`client_test.go:135-137`).
   *
   * Where each line is decoded: the driver decodes every DML line once,
   * in `MaxScaleCdcMicroBatchStream.drain()`, and keeps its stream key
@@ -53,7 +54,12 @@ import scala.collection.mutable
   * The input partition ships the raw lines rather than decoded
   * envelopes: Java task serialization of per-line objects costs more
   * than a second tree-free envelope scan (`Protocol.decodeDmlEvent`),
-  * and the `raw` column needs the line anyway.
+  * and the `raw` column needs the line anyway. The payload is parsed
+  * by the query's own `from_json(raw, schema)`, in the same task, on
+  * the executor: `CdcPayloadRule` turns that call into
+  * `CdcPayloadFromJson`, which reads the `raw` bytes without Spark's
+  * per-row 8 KiB reader. So a DML line is parsed once as it arrives
+  * and twice in the executor task (envelope scan, payload parse).
   */
 class MaxScaleCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "maxscale-cdc"

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.util.ParseMode
 
 /** Bridge to the `private[sql]` Column ↔ Expression converters.
   *
@@ -11,9 +12,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * (graft.functions.DotProduct) need exactly these two conversions, so
   * this object re-exports them from inside the `sql` package — the
   * conventional extension point for libraries shipping catalyst
-  * expressions without a full FunctionRegistry registration.
+  * expressions without a full FunctionRegistry registration. The
+  * `from_json` parse-mode error is re-exported for the same reason
+  * (graft.cdc.CdcPayloadFromJson).
   */
 object GraftExpressionBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  def parseModeUnsupportedError(funcName: String, mode: ParseMode): Throwable =
+    errors.QueryCompilationErrors.parseModeUnsupportedError(funcName, mode)
 }
