@@ -65,17 +65,6 @@ object CdcModel {
   val MetadataKeys: Seq[String] = Seq("domain", "server_id", "sequence",
     "event_number", "timestamp", "event_type", "table_name", "table_schema")
 
-  /** Fixed Catalyst schema for the DML envelope (SURVEY.md §1.2). */
-  val EnvelopeSchema: StructType = StructType(Seq(
-    StructField("domain", IntegerType),
-    StructField("server_id", IntegerType),
-    StructField("sequence", LongType),
-    StructField("event_number", IntegerType),
-    StructField("timestamp", LongType),
-    StructField("event_type", StringType),
-    StructField("table_name", StringType),
-    StructField("table_schema", StringType)))
-
   private val decimalRe = """decimal\((\d+),\s*(\d+)\)""".r
 
   /** Map one Avro/MariaDB type name to a Catalyst type. `realType`

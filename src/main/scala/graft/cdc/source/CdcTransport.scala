@@ -293,16 +293,16 @@ final class ReplayTransport(path: String, gtid: Option[String])
     lines = gtid.flatMap(Protocol.parseGtid) match {
       case Some((d, s, seq)) =>
         val target = Protocol.formatGtid(d, s, seq)
+        def decode(l: String) =
+          MaxScaleCdcSource.decodeDml(l, s"replay file $path")
         val idx = all.indexWhere(l => Protocol.isDmlEvent(l) &&
-          Protocol.decodeDmlEvent(l).gtid == target)
+          decode(l).gtid == target)
         if (idx >= 0)
           all.zipWithIndex.collect {
             case (l, i) if !Protocol.isDmlEvent(l) || i >= idx => l
           }
-        else all.filter { l =>
-          !Protocol.isDmlEvent(l) ||
-            Protocol.decodeDmlEvent(l).sequence >= seq
-        }
+        else all.filter(l =>
+          !Protocol.isDmlEvent(l) || decode(l).sequence >= seq)
       case None => all
     }
   }

@@ -60,6 +60,11 @@ import scala.collection.mutable
   * `CdcPayloadFromJson`, which reads the `raw` bytes without Spark's
   * per-row 8 KiB reader. So a DML line is parsed once as it arrives
   * and twice in the executor task (envelope scan, payload parse).
+  *
+  * A malformed DML line fails the query, naming the stream and quoting
+  * the line, as the reference's loop ends on a decode error
+  * (`client.go:240-246`). A restart resumes from the checkpointed GTID
+  * and so meets the same line again.
   */
 class MaxScaleCdcProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "maxscale-cdc"
@@ -81,6 +86,19 @@ object MaxScaleCdcSource {
     StructField("table_name", StringType),
     StructField("table_schema", StringType),
     StructField("raw", StringType)))
+
+  /** `database.table`, or the replay file: what a decode error names. */
+  def streamName(opts: Map[String, String]): String =
+    opts.get("replayfile").map(p => s"replay file $p").getOrElse(
+      s"${opts.getOrElse("database", "?")}.${opts.getOrElse("table", "?")}")
+
+  /** [[Protocol.decodeDmlEvent]], with the stream and line in errors. */
+  def decodeDml(line: String, stream: String): graft.cdc.CdcModel.DmlEvent =
+    try Protocol.decodeDmlEvent(line)
+    catch {
+      case e: java.io.IOException => throw new java.io.IOException(
+        s"maxscale-cdc $stream: malformed DML line: ${line.take(120)}", e)
+    }
 
   def transportFor(opts: Map[String, String]): CdcTransport = {
     opts.get("replayfile") match {
@@ -150,12 +168,7 @@ final class MaxScaleCdcTable(properties: util.Map[String, String])
               Array(CdcInputPartition(lines.toArray))
             }
             override def createReaderFactory(): PartitionReaderFactory =
-              new PartitionReaderFactory {
-                override def createReader(
-                    p: InputPartition): PartitionReader[InternalRow] =
-                  new CdcPartitionReader(
-                    p.asInstanceOf[CdcInputPartition].lines)
-              }
+              CdcReaderFactory(MaxScaleCdcSource.streamName(opts))
           }
         }
       }
@@ -241,6 +254,7 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
 
   import MaxScaleCdcMicroBatchStream.Buffered
 
+  private val stream = MaxScaleCdcSource.streamName(opts)
   private var transport: CdcTransport = _
   private var started = false
   // Buffered lines with their absolute index [firstIndex, ...], each
@@ -312,7 +326,7 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
     transport.error.foreach(t => throw t)
     transport.poll().foreach { line =>
       if (Protocol.isDmlEvent(line)) {
-        val e = Protocol.decodeDmlEvent(line)
+        val e = MaxScaleCdcSource.decodeDml(line, stream)
         val key = streamKey(e.domain, e.serverId)
         if (e.sequence > dedupe.getOrElse(key, Long.MinValue)) {
           lastDml = Buffered(line, key, e.sequence)
@@ -472,10 +486,7 @@ final class MaxScaleCdcMicroBatchStream(opts: Map[String, String])
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-        new CdcPartitionReader(p.asInstanceOf[CdcInputPartition].lines)
-    }
+    CdcReaderFactory(stream)
 
   override def commit(end: Offset): Unit = synchronized {
     val e = end.asInstanceOf[CdcOffset].index
@@ -507,16 +518,24 @@ object MaxScaleCdcMicroBatchStream {
 final case class CdcInputPartition(lines: Array[String])
     extends InputPartition
 
+/** Reader factory of the streaming and the batch replay read; `stream`
+  * is what a decode error names. */
+final case class CdcReaderFactory(stream: String)
+    extends PartitionReaderFactory {
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    new CdcPartitionReader(p.asInstanceOf[CdcInputPartition].lines, stream)
+}
+
 /** Decodes one micro-batch of event lines into envelope rows
   * (reference decode dispatch `client.go:289-304`). */
-final class CdcPartitionReader(lines: Array[String])
+final class CdcPartitionReader(lines: Array[String], stream: String)
     extends PartitionReader[InternalRow] {
   private var i = -1
   override def next(): Boolean = { i += 1; i < lines.length }
   override def get(): InternalRow = {
     val line = lines(i)
     if (Protocol.isDmlEvent(line)) {
-      val e = Protocol.decodeDmlEvent(line)
+      val e = MaxScaleCdcSource.decodeDml(line, stream)
       InternalRow(e.domain, e.serverId, e.sequence, e.eventNumber,
         e.timestamp * 1000000L, // unix secs → µs TimestampType
         UTF8String.fromString(e.eventType),

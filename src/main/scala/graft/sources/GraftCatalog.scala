@@ -159,115 +159,114 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       changes: TableChange*): Table = {
     val dir = tableDir(ident)
     if (!isTable(dir)) throw new NoSuchTableException(ident)
-    val m = ManifestSink.readManifest(dir.toString)
-    var schema = StructType.fromDDL(m.schemaDdl)
-    // `origIds` freezes entries (their names are PRE-change current —
-    // readManifest normalized them); the mutable copy tracks this
-    // batch's changes for the published schema
-    val origIds = ManifestSink.currentColIds(m)
-    var colIds = origIds
-    var lastId = math.max(m.lastColId,
-      origIds.map(_.id).foldLeft(-1)(math.max))
-    var eqDel = m.eqDeletes
-    var renamed = false
     var sidecarRenames = Map.empty[String, String]
     // Some(Some(spec)) = set the default transform, Some(None) =
     // clear it, None = untouched by this ALTER batch
     var newPartSpec: Option[Option[String]] = None
-    changes.foreach {
-      case add: TableChange.AddColumn =>
-        if (add.fieldNames().length != 1)
-          throw new UnsupportedOperationException(
-            "graft-manifest: only top-level ADD COLUMN is supported")
-        if (!add.isNullable)
-          throw new UnsupportedOperationException(
-            "graft-manifest: added columns must be nullable — existing " +
-              "files have no values for them")
-        schema = schema.add(add.fieldNames()(0), add.dataType(),
-          nullable = true)
-        lastId += 1 // ids are never reused, even after drops
-        colIds = colIds :+ ManifestSink.ColId(add.fieldNames()(0), lastId)
-      case del: TableChange.DeleteColumn =>
-        // metadata-only, same doctrine as ADD COLUMN: readers resolve
-        // columns per file, so a dropped column simply stops being
-        // projected — no data file is rewritten, and time travel
-        // still reads it in the old snapshots' own schema.
-        if (del.fieldNames().length != 1)
-          throw new UnsupportedOperationException(
-            "graft-manifest: only top-level DROP COLUMN is supported")
-        val name = del.fieldNames()(0)
-        if (!schema.fieldNames.contains(name))
-          throw new IllegalArgumentException(
-            s"graft-manifest: no column '$name' to drop")
-        if (schema.fields.length == 1)
-          throw new UnsupportedOperationException(
-            "graft-manifest: cannot drop the last column")
-        schema = StructType(schema.fields.filterNot(_.name == name))
-        colIds = colIds.filterNot(_.name == name)
-      case ren: TableChange.RenameColumn =>
-        if (ren.fieldNames().length != 1)
-          throw new UnsupportedOperationException(
-            "graft-manifest: only top-level RENAME COLUMN is supported")
-        val from = ren.fieldNames()(0)
-        val to = ren.newName()
-        if (!schema.fieldNames.contains(from))
-          throw new IllegalArgumentException(
-            s"graft-manifest: no column '$from' to rename")
-        if (schema.fieldNames.contains(to))
-          throw new IllegalArgumentException(
-            s"graft-manifest: cannot rename '$from' to '$to' — column " +
-              "already exists")
-        schema = StructType(schema.fields.map(f =>
-          if (f.name == from) f.copy(name = to) else f))
-        colIds = colIds.map(c =>
-          if (c.name == from) c.copy(name = to) else c)
-        // live equality deletes track the field, not the spelling
-        eqDel = eqDel.map(d => if (d.col == from) d.copy(col = to) else d)
-        sidecarRenames += (from -> to)
-        renamed = true
-      // PARTITION-SPEC EVOLUTION (the Iceberg spec-evolution idea at
-      // sidecar scale): ALTER TABLE … SET TBLPROPERTIES
-      // ('partitionedBy' = 'days(ts)') changes the DEFAULT transform
-      // future inserts route by; existing files keep their own
-      // per-ENTRY spec (the reader prunes per entry, so mixed layouts
-      // never mis-prune — that safety is pinned since the transform
-      // landed). UNSET removes the default (inserts stop routing).
-      // Metadata-only both ways: nothing is rewritten.
-      case set: TableChange.SetProperty
-          if set.property == "partitionedBy" =>
-        val spec = ManifestSink.parsePartSpec(set.value)
-        if (!schema.fieldNames.contains(spec.col))
-          throw new IllegalArgumentException(
-            s"graft-manifest: partition column '${spec.col}' is not " +
-              "a table column")
-        newPartSpec = Some(Some(set.value))
-      case rm: TableChange.RemoveProperty
-          if rm.property == "partitionedBy" =>
-        newPartSpec = Some(None)
-      case other => throw new UnsupportedOperationException(
-        s"graft-manifest: unsupported table change $other")
-    }
-    ManifestSink.writeManifestAs(dir.toString,
-      ManifestSink.archiveManifestFile(m.version), m)
-    val annotated = m.files.map { e0 =>
-      val e = if (e0.schemaDdl.isEmpty) e0.copy(schemaDdl = Some(m.schemaDdl))
-        else e0
-      if (!renamed) e
-      else {
-        // freeze this file's recorded names against the PRE-change
-        // ids so any future read re-resolves them by id
-        val byName = origIds.map(c => c.name -> c.id).toMap
-        val names = StructType.fromDDL(e.schemaDdl.get).fieldNames
-        e.copy(colIds = Some(names.map(n =>
-          ManifestSink.ColId(n, byName.getOrElse(n, -1))).toSeq))
+    ManifestSink.commitSnapshot(dir.toString, ManifestSink.Epochs.Keep) {
+      (head, version) =>
+      val m = head.getOrElse(throw new NoSuchTableException(ident))
+      var schema = StructType.fromDDL(m.schemaDdl)
+      // `origIds` freezes entries (their names are PRE-change current —
+      // readManifest normalized them); the mutable copy tracks this
+      // batch's changes for the published schema
+      val origIds = ManifestSink.currentColIds(m)
+      var colIds = origIds
+      var lastId = math.max(m.lastColId,
+        origIds.map(_.id).foldLeft(-1)(math.max))
+      var eqDel = m.eqDeletes
+      var renamed = false
+      changes.foreach {
+        case add: TableChange.AddColumn =>
+          if (add.fieldNames().length != 1)
+            throw new UnsupportedOperationException(
+              "graft-manifest: only top-level ADD COLUMN is supported")
+          if (!add.isNullable)
+            throw new UnsupportedOperationException(
+              "graft-manifest: added columns must be nullable — existing " +
+                "files have no values for them")
+          schema = schema.add(add.fieldNames()(0), add.dataType(),
+            nullable = true)
+          lastId += 1 // ids are never reused, even after drops
+          colIds = colIds :+ ManifestSink.ColId(add.fieldNames()(0), lastId)
+        case del: TableChange.DeleteColumn =>
+          // metadata-only, same doctrine as ADD COLUMN: readers resolve
+          // columns per file, so a dropped column simply stops being
+          // projected — no data file is rewritten, and time travel
+          // still reads it in the old snapshots' own schema.
+          if (del.fieldNames().length != 1)
+            throw new UnsupportedOperationException(
+              "graft-manifest: only top-level DROP COLUMN is supported")
+          val name = del.fieldNames()(0)
+          if (!schema.fieldNames.contains(name))
+            throw new IllegalArgumentException(
+              s"graft-manifest: no column '$name' to drop")
+          if (schema.fields.length == 1)
+            throw new UnsupportedOperationException(
+              "graft-manifest: cannot drop the last column")
+          schema = StructType(schema.fields.filterNot(_.name == name))
+          colIds = colIds.filterNot(_.name == name)
+        case ren: TableChange.RenameColumn =>
+          if (ren.fieldNames().length != 1)
+            throw new UnsupportedOperationException(
+              "graft-manifest: only top-level RENAME COLUMN is supported")
+          val from = ren.fieldNames()(0)
+          val to = ren.newName()
+          if (!schema.fieldNames.contains(from))
+            throw new IllegalArgumentException(
+              s"graft-manifest: no column '$from' to rename")
+          if (schema.fieldNames.contains(to))
+            throw new IllegalArgumentException(
+              s"graft-manifest: cannot rename '$from' to '$to' — column " +
+                "already exists")
+          schema = StructType(schema.fields.map(f =>
+            if (f.name == from) f.copy(name = to) else f))
+          colIds = colIds.map(c =>
+            if (c.name == from) c.copy(name = to) else c)
+          // live equality deletes track the field, not the spelling
+          eqDel = eqDel.map(d => if (d.col == from) d.copy(col = to) else d)
+          sidecarRenames += (from -> to)
+          renamed = true
+        // PARTITION-SPEC EVOLUTION (the Iceberg spec-evolution idea at
+        // sidecar scale): ALTER TABLE … SET TBLPROPERTIES
+        // ('partitionedBy' = 'days(ts)') changes the DEFAULT transform
+        // future inserts route by; existing files keep their own
+        // per-ENTRY spec (the reader prunes per entry, so mixed layouts
+        // never mis-prune — that safety is pinned since the transform
+        // landed). UNSET removes the default (inserts stop routing).
+        // Metadata-only both ways: nothing is rewritten.
+        case set: TableChange.SetProperty
+            if set.property == "partitionedBy" =>
+          val spec = ManifestSink.parsePartSpec(set.value)
+          if (!schema.fieldNames.contains(spec.col))
+            throw new IllegalArgumentException(
+              s"graft-manifest: partition column '${spec.col}' is not " +
+                "a table column")
+          newPartSpec = Some(Some(set.value))
+        case rm: TableChange.RemoveProperty
+            if rm.property == "partitionedBy" =>
+          newPartSpec = Some(None)
+        case other => throw new UnsupportedOperationException(
+          s"graft-manifest: unsupported table change $other")
       }
-    }
-    val carryIds = renamed || m.colIds.nonEmpty
-    ManifestSink.writeManifest(dir.toString,
-      ManifestSink.Manifest(ManifestSink.nullableDdl(schema), annotated,
-        m.version + 1, eqDel,
+      val ddl = ManifestSink.nullableDdl(schema)
+      val annotated = ManifestSink.carried(m, ddl).map { e =>
+        if (!renamed) e
+        else {
+          // freeze this file's recorded names against the PRE-change
+          // ids so any future read re-resolves them by id
+          val byName = origIds.map(c => c.name -> c.id).toMap
+          val names =
+            StructType.fromDDL(e.schemaDdl.getOrElse(m.schemaDdl)).fieldNames
+          e.copy(colIds = Some(names.map(n =>
+            ManifestSink.ColId(n, byName.getOrElse(n, -1))).toSeq))
+        }
+      }
+      val carryIds = renamed || m.colIds.nonEmpty
+      ManifestSink.Manifest(ddl, annotated, version, eqDel,
         if (carryIds) colIds else Nil,
-        if (carryIds) lastId else -1))
+        if (carryIds) lastId else -1)
+    }
     // the declared partition transform follows the rename too
     if (sidecarRenames.nonEmpty) readSidecar(dir).foreach { ps =>
       val spec = ManifestSink.parsePartSpec(ps)

@@ -137,7 +137,7 @@ private[sources] object GraftProcedures {
         (resolve, in) => {
           val dir = resolve(in.getUTF8String(0).toString)
           val before = countFiles(dir, ManifestSink.DelSuffix)
-          ManifestSink.sweepDeleteFiles(dir)
+          ManifestSink.sweep(dir, data = false)
           result(StructType(Seq(
             StructField("delete_files_removed", LongType,
               nullable = false))),

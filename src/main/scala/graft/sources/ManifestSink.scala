@@ -810,38 +810,32 @@ object ManifestSink {
     * [[compact]] materializes and re-exactifies. Integral/date/
     * timestamp/string key columns only (same canonicalization as
     * zone maps and blooms). */
-  def deleteEq(dir: String, col: String, values: Seq[Any]): Unit = {
-    val merged = readAll(dir)
-    val schema = StructType.fromDDL(merged.schemaDdl)
-    val f = schema.fields.find(_.name == col).getOrElse(
-      throw new IllegalArgumentException(
-        s"graft-manifest: deleteEq column '$col' not in table schema " +
-          schema.fieldNames.mkString("(", ", ", ")")))
-    import org.apache.spark.sql.types._
-    f.dataType match {
-      case LongType | IntegerType | ShortType | ByteType | DateType |
-           TimestampType | TimestampNTZType | StringType => ()
-      case dt => throw new IllegalArgumentException(
-        s"graft-manifest: deleteEq column '$col' has unsupported type " +
-          s"${dt.sql} — integral/date/timestamp/string only")
-    }
-    val canon: Seq[String] = values.map {
-      case s: String => s
-      case other => litLong(other).getOrElse(
+  def deleteEq(dir: String, col: String, values: Seq[Any]): Unit =
+    commitSnapshot(dir, Epochs.Fold) { (head, version) =>
+      val merged = head.get
+      val schema = StructType.fromDDL(merged.schemaDdl)
+      val f = schema.fields.find(_.name == col).getOrElse(
         throw new IllegalArgumentException(
-          s"graft-manifest: deleteEq value '$other' cannot be " +
-            "canonicalized")).toString
+          s"graft-manifest: deleteEq column '$col' not in table schema " +
+            schema.fieldNames.mkString("(", ", ", ")")))
+      import org.apache.spark.sql.types._
+      f.dataType match {
+        case LongType | IntegerType | ShortType | ByteType | DateType |
+             TimestampType | TimestampNTZType | StringType => ()
+        case dt => throw new IllegalArgumentException(
+          s"graft-manifest: deleteEq column '$col' has unsupported type " +
+            s"${dt.sql} — integral/date/timestamp/string only")
+      }
+      val canon: Seq[String] = values.map {
+        case s: String => s
+        case other => litLong(other).getOrElse(
+          throw new IllegalArgumentException(
+            s"graft-manifest: deleteEq value '$other' cannot be " +
+              "canonicalized")).toString
+      }
+      Manifest(merged.schemaDdl, merged.files, version,
+        merged.eqDeletes :+ EqDelete(col, version, canon))
     }
-    val prior =
-      if (new File(dir, ManifestFile).exists()) Some(readManifest(dir))
-      else None
-    prior.foreach(p =>
-      writeManifestAs(dir, archiveManifestFile(p.version), p))
-    val version = prior.map(_.version + 1).getOrElse(1L)
-    writeManifest(dir, Manifest(merged.schemaDdl, merged.files, version,
-      merged.eqDeletes :+ EqDelete(col, version, canon)))
-    foldEpochTombstones(dir)
-  }
 
   /** SQL TRUNCATE: publish an empty snapshot. Prior base archived
     * (time travel keeps working until vacuum); streaming epoch
@@ -849,18 +843,11 @@ object ManifestSink {
     * batch overwrite commit; equality deletes are dropped — they
     * applied to the replaced state. */
   def truncate(dir: String): Unit = {
-    val prior = readManifest(dir)
-    writeManifestAs(dir, archiveManifestFile(prior.version), prior)
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("_graft_manifest-epoch\\d+\\.json"))
-      .foreach(_.delete())
-    writeManifest(dir, Manifest(prior.schemaDdl, Nil, prior.version + 1))
-    val referenced = listAllManifests(dir)
-      .flatMap(f => readManifestFile(f).files.map(_.name)).toSet
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(DataSuffix) &&
-        !referenced(f.getName)).foreach(_.delete())
-    sweepDeleteFiles(dir)
+    commitSnapshot(dir, Epochs.Retire) { (prior, version) =>
+      Manifest(prior.getOrElse(throw nothingCommitted(dir)).schemaDdl, Nil,
+        version)
+    }
+    sweep(dir, data = true)
   }
 
   /** ROLLBACK to an archived snapshot, audit-preserving (the Iceberg
@@ -879,14 +866,8 @@ object ManifestSink {
     val prior = readManifest(dir)
     if (toVersion == prior.version) return prior.version
     val target = readAsOf(dir, Some(toVersion))
-    writeManifestAs(dir, archiveManifestFile(prior.version), prior)
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("_graft_manifest-epoch\\d+\\.json"))
-      .foreach(_.delete())
-    val v = prior.version + 1
-    writeManifest(dir,
+    commitSnapshot(dir, Epochs.Retire)((_, v) =>
       Manifest(target.schemaDdl, target.files, v, target.eqDeletes))
-    v
   }
 
   // ---- Branches: the Write-Audit-Publish surface -------------------
@@ -1005,13 +986,8 @@ object ManifestSink {
     * version. */
   def fastForward(dir: String, name: String): Long = {
     val b = readBranch(dir, name)
-    val prior = readManifest(dir)
-    writeManifestAs(dir, archiveManifestFile(prior.version), prior)
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("_graft_manifest-epoch\\d+\\.json"))
-      .foreach(_.delete())
-    val v = prior.version + 1
-    writeManifest(dir, Manifest(b.schemaDdl, b.files, v, b.eqDeletes))
+    val v = commitSnapshot(dir, Epochs.Retire)((_, v) =>
+      Manifest(b.schemaDdl, b.files, v, b.eqDeletes))
     dropBranch(dir, name)
     v
   }
@@ -1204,18 +1180,70 @@ object ManifestSink {
     a.files.filterNot(e => bs(sig(a, e))).map(_.name)
   }
 
-  /** Fold streaming epoch manifests into the base after a DELETE-type
-    * commit absorbed their entries: the epoch files stay as EMPTY
-    * tombstones so the epoch-id idempotence token survives crash
-    * replay without double-counting. */
-  def foldEpochTombstones(dir: String): Unit =
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.matches("_graft_manifest-epoch\\d+\\.json"))
-      .foreach { f =>
-        val m = readManifestFile(f)
-        if (m.files.nonEmpty)
-          writeManifestAs(dir, f.getName, Manifest(m.schemaDdl, Nil))
+  /** What a base-chain commit does with the streaming epoch manifests,
+    * fixed by the kind of commit. `Keep` (appends, schema changes):
+    * they stay live beside the new base. `Fold` (DELETE-type commits):
+    * the head merges them into the base, and each one read stays behind
+    * as an EMPTY tombstone, so the epoch-id idempotence token survives
+    * crash replay without double-counting. `Retire` (overwrite,
+    * truncate, rollback, fast-forward): they go with the replaced
+    * state. */
+  sealed trait Epochs
+  object Epochs {
+    case object Keep extends Epochs
+    case object Fold extends Epochs
+    case object Retire extends Epochs
+  }
+
+  /** THE base-chain snapshot commit. Under [[withCommitLock]] it reads
+    * the head (the prior base, merged with the epochs for `Fold`; None
+    * before a table's first commit), checks that every `inputs` file is
+    * still in it, archives the prior base as `_graft_manifest.v<N>.json`,
+    * and publishes `build(head, N + 1)` with a stamped commit time.
+    * Callers run their Spark jobs BEFORE: only metadata is read and
+    * written under the lock. Because the head is read here, a commit is
+    * rebased onto whatever committed while its job ran. The inputs are
+    * the files the job's output refers to (DELETE targets, copy-on-write
+    * replaced files); if a concurrent commit removed one, the commit
+    * deletes the files it `written`, publishes nothing and throws an
+    * IllegalStateException naming it. Returns the new version. */
+  def commitSnapshot(dir: String, epochs: Epochs,
+      inputs: Iterable[String] = Nil, written: Iterable[String] = Nil)(
+      build: (Option[Manifest], Long) => Manifest): Long =
+    withCommitLock(dir) {
+      val baseFile = new File(dir, ManifestFile)
+      val prior =
+        if (baseFile.exists()) Some(readManifestFile(baseFile)) else None
+      val epochFiles = dirFiles(dir).filter(f => isEpoch(f.getName))
+        .sortBy(_.getName).toSeq
+      val folded = if (epochs != Epochs.Fold) Nil
+        else epochFiles.map(f => f -> readManifestFile(f))
+      val head =
+        if (epochs != Epochs.Fold) prior
+        else if (prior.isEmpty && folded.isEmpty) throw nothingCommitted(dir)
+        else Some(mergeHead(prior, folded.map(_._2)))
+      lazy val live = head.toSeq.flatMap(_.files.map(_.name)).toSet
+      inputs.find(n => !live(n)).foreach { n =>
+        written.foreach(w => new File(dir, w).delete())
+        throw new IllegalStateException(
+          s"graft-manifest: $n is no longer in the table at $dir — a " +
+            "concurrent commit replaced or removed it; nothing committed")
       }
+      val version = prior.fold(1L)(_.version + 1)
+      val m = build(head, version)
+      prior.foreach(p =>
+        writeManifestAs(dir, archiveManifestFile(p.version), p))
+      if (epochs == Epochs.Retire) epochFiles.foreach(_.delete())
+      stampAndPublish(dir, m)
+      folded.foreach { case (f, e) =>
+        if (e.files.nonEmpty)
+          writeManifestAs(dir, f.getName, Manifest(e.schemaDdl, Nil))
+      }
+      version
+    }
+
+  private def nothingCommitted(dir: String) = new IllegalArgumentException(
+    s"graft-manifest: no manifest under $dir — nothing committed")
 
   /** Shared DELETE commit core: `hits` is a frame of (_1 = data file
     * name, _2 = physical row ordinal) addresses to mask, each address
@@ -1236,7 +1264,6 @@ object ManifestSink {
     * chunk per task — and here every scan task is a result task. */
   private def commitDeletes(dir: String,
       hits: org.apache.spark.sql.DataFrame): Long = {
-    val merged = readAll(dir)
     val written: Array[(String, String, Long, Long)] =
       hits.queryExecution.toRdd.mapPartitions { it =>
         val byFile = scala.collection.mutable.LinkedHashMap
@@ -1259,38 +1286,46 @@ object ManifestSink {
         }
       }.collect()
     if (written.isEmpty) return 0L
-    val prior =
-      if (new File(dir, ManifestFile).exists()) Some(readManifest(dir))
-      else None
-    prior.foreach(p =>
-      writeManifestAs(dir, archiveManifestFile(p.version), p))
-    val version = prior.map(_.version + 1).getOrElse(1L)
     val byData = written.groupBy(_._1)
-    val entries = merged.files.map { e =>
-      byData.get(e.name) match {
-        case Some(ws) => e.copy(deletes =
-          e.deletes ++ ws.map(w => DelFile(w._2, w._3, w._4)))
-        case None => e
-      }
+    commitSnapshot(dir, Epochs.Fold, byData.keys, written.map(_._2)) {
+      (head, version) =>
+        val merged = head.get
+        val entries = merged.files.map { e =>
+          byData.get(e.name) match {
+            case Some(ws) => e.copy(deletes =
+              e.deletes ++ ws.map(w => DelFile(w._2, w._3, w._4)))
+            case None => e
+          }
+        }
+        Manifest(merged.schemaDdl, entries, version, merged.eqDeletes)
     }
-    writeManifest(dir, Manifest(merged.schemaDdl, entries, version,
-      merged.eqDeletes))
-    foldEpochTombstones(dir)
-    sweepDeleteFiles(dir)
+    sweep(dir, data = false)
     written.map(_._3).sum
   }
 
-  /** Remove delete files no manifest — base, archive, or epoch —
-    * references (a DELETE that lost a concurrent commit race, or
-    * refs retired by compaction + vacuum). */
-  def sweepDeleteFiles(dir: String): Unit = {
-    val referenced = listAllManifests(dir)
-      .flatMap(f => readManifestFile(f).files.flatMap(_.deletes.map(_.name)))
-      .toSet
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(DelSuffix) && !referenced(f.getName))
-      .foreach(_.delete())
+  /** Delete the files that no manifest — base, archive, epoch, branch
+    * or tag — references: delete files always (a DELETE that lost a
+    * commit race, refs retired by compaction + vacuum), data files too
+    * when `data` (failed or speculative attempts, replaced data). */
+  def sweep(dir: String, data: Boolean): Unit = {
+    val refs = referencedFiles(dir)
+    dirFiles(dir).filter { f =>
+      val n = f.getName
+      (n.endsWith(DelSuffix) || data && n.endsWith(DataSuffix)) && !refs(n)
+    }.foreach(_.delete())
   }
+
+  /** Names of the data and delete files any manifest document under
+    * `dir` references, parsing each document once. */
+  private def referencedFiles(dir: String): Set[String] =
+    listAllManifests(dir).map(readManifestFile).flatMap(_.files.flatMap(e =>
+      e.name +: e.deletes.map(_.name))).toSet
+
+  private def dirFiles(dir: String): Array[File] =
+    Option(new File(dir).listFiles()).getOrElse(Array.empty)
+
+  private def isEpoch(name: String): Boolean =
+    name.matches("_graft_manifest-epoch\\d+\\.json")
 
   /** Orphan-file cleanup (Iceberg's `remove_orphan_files` verb — the
     * third maintenance knob beside [[vacuum]]/[[expireSnapshots]]):
@@ -1314,15 +1349,11 @@ object ManifestSink {
     * reads a data byte. */
   def removeOrphans(dir: String, olderThanMillis: Long,
       dryRun: Boolean): Seq[(String, Boolean)] = {
-    val referenced = listAllManifests(dir).flatMap { f =>
-      val m = readManifestFile(f)
-      m.files.map(_.name) ++ m.files.flatMap(_.deletes.map(_.name))
-    }.toSet
-    Option(new File(dir).listFiles())
-      .getOrElse(Array.empty)
+    val refs = referencedFiles(dir)
+    dirFiles(dir)
       .filter(f => (f.getName.endsWith(DataSuffix) ||
         f.getName.endsWith(DelSuffix)) &&
-        !referenced(f.getName) && f.lastModified() < olderThanMillis)
+        !refs(f.getName) && f.lastModified() < olderThanMillis)
       .sortBy(_.getName).toSeq
       .map(f => (f.getName, !dryRun && f.delete()))
   }
@@ -1337,17 +1368,11 @@ object ManifestSink {
     * WAP audit keeps every file it can see, exactly as under
     * [[vacuum]]). Returns the number of archived snapshots dropped. */
   def expireSnapshots(dir: String, olderThanMillis: Long): Long = {
-    val victims = Option(new File(dir).listFiles())
-      .getOrElse(Array.empty)
+    val victims = dirFiles(dir)
       .filter(f => f.getName.matches("_graft_manifest\\.v\\d+\\.json") &&
         f.lastModified() < olderThanMillis)
     victims.foreach(_.delete())
-    val referenced = listAllManifests(dir)
-      .flatMap(f => readManifestFile(f).files.map(_.name)).toSet
-    new File(dir).listFiles()
-      .filter(f => f.getName.endsWith(DataSuffix) && !referenced(f.getName))
-      .foreach(_.delete())
-    sweepDeleteFiles(dir)
+    sweep(dir, data = true)
     victims.length.toLong
   }
 
@@ -1357,27 +1382,22 @@ object ManifestSink {
   def vacuum(dir: String, keepVersions: Int): Unit = {
     val base = readManifest(dir)
     val cutoff = base.version - keepVersions
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
+    dirFiles(dir)
       .filter { f =>
         f.getName.matches("_graft_manifest\\.v\\d+\\.json") &&
           f.getName.stripPrefix("_graft_manifest.v")
             .stripSuffix(".json").toLong < cutoff
       }.foreach(_.delete())
-    val referenced = listAllManifests(dir)
-      .flatMap(f => readManifestFile(f).files.map(_.name)).toSet
-    new File(dir).listFiles()
-      .filter(f => f.getName.endsWith(DataSuffix) && !referenced(f.getName))
-      .foreach(_.delete())
-    sweepDeleteFiles(dir)
+    sweep(dir, data = true)
   }
 
   /** Every manifest document under `dir`: base, archived snapshots,
     * and streaming epochs. */
   def listAllManifests(dir: String): Seq[File] =
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
+    dirFiles(dir)
       .filter(f => f.getName == ManifestFile ||
         f.getName.matches("_graft_manifest\\.v\\d+\\.json") ||
-        f.getName.matches("_graft_manifest-epoch\\d+\\.json") ||
+        isEpoch(f.getName) ||
         // branch chains keep their staged files referenced — a sweep
         // during an open audit must not delete staged data
         f.getName.matches(
@@ -1389,9 +1409,8 @@ object ManifestSink {
 
   /** Every published manifest under `dir` (batch + streaming epochs). */
   def listManifests(dir: String): Seq[File] =
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName == ManifestFile ||
-        f.getName.matches("_graft_manifest-epoch\\d+\\.json"))
+    dirFiles(dir)
+      .filter(f => f.getName == ManifestFile || isEpoch(f.getName))
       .sortBy(_.getName).toSeq
 
   /** Merged table state: union of all manifests' file lists. The
@@ -1400,25 +1419,30 @@ object ManifestSink {
     * so the reader can resolve columns by name per file. */
   def readAll(dir: String): Manifest = {
     val ms = listManifests(dir)
-    if (ms.isEmpty) throw new IllegalArgumentException(
-      s"graft-manifest: no manifest under $dir — nothing committed")
-    val parsed = ms.map(f => readManifestFile(f))
-    val baseIdx = ms.indexWhere(_.getName == ManifestFile)
-    val mergedSchema =
-      if (baseIdx >= 0) parsed(baseIdx).schemaDdl else parsed.head.schemaDdl
-    val files = parsed.flatMap { m =>
-      m.files.map { e =>
-        if (e.schemaDdl.isEmpty && m.schemaDdl != mergedSchema)
-          e.copy(schemaDdl = Some(m.schemaDdl))
-        else e
-      }
-    }
+    if (ms.isEmpty) throw nothingCommitted(dir)
+    val parsed = ms.map(f => f.getName -> readManifestFile(f))
+    mergeHead(parsed.collectFirst { case (ManifestFile, m) => m },
+      parsed.collect { case (n, m) if n != ManifestFile => m })
+  }
+
+  /** [[readAll]] of parsed documents: epoch entries, then the base's. */
+  private def mergeHead(base: Option[Manifest],
+      epochs: Seq[Manifest]): Manifest = {
+    val schema = base.getOrElse(epochs.head).schemaDdl
     // equality deletes live on the BASE manifest only (epoch entries
     // carry no sequence number, so a live equality delete masks them
     // too — conservative, declared)
-    val eq = if (baseIdx >= 0) parsed(baseIdx).eqDeletes else Nil
-    Manifest(mergedSchema, files, eqDeletes = eq)
+    Manifest(schema, (epochs ++ base).flatMap(carried(_, schema)),
+      eqDeletes = base.map(_.eqDeletes).getOrElse(Nil))
   }
+
+  /** `m`'s entries as carried into a manifest whose schema is `ddl`:
+    * an entry written under `m`'s schema keeps it on record when the
+    * two differ, so readers resolve its columns by name. */
+  def carried(m: Manifest, ddl: String): Seq[Entry] =
+    if (m.schemaDdl == ddl) m.files
+    else m.files.map(e =>
+      if (e.schemaDdl.isEmpty) e.copy(schemaDdl = Some(m.schemaDdl)) else e)
 
   def requirePath(opts: Map[String, String]): String =
     opts.collectFirst { case (k, v) if k.equalsIgnoreCase("path") => v }
@@ -1500,12 +1524,19 @@ object ManifestSink {
     finally out.close()
     val dst = new File(dir, fileName)
     if (!tmp.renameTo(dst)) {
-      // a concurrent committer won the rename — this job loses cleanly
+      // an IO failure: rename(2) replaces an existing target, so this
+      // never means another committer won (see withCommitLock)
       tmp.delete()
       throw new IllegalStateException(
-        s"graft-manifest: concurrent commit detected at $dst")
+        s"graft-manifest: could not publish $dst")
     }
   }
+
+  /** [[stampAndPublish]] `m` under the commit lock; returns the minted
+    * committedAt. Table creation publishes v0 this way, every later
+    * base-chain commit goes through [[commitSnapshot]]. */
+  def writeManifest(dir: String, m: Manifest): Long =
+    withCommitLock(dir)(stampAndPublish(dir, m))
 
   /** Publish `m` as the base, stamping its commit time under a
     * MONOTONIC clock: committedAt = max(now, prior base's stamp + 1),
@@ -1514,17 +1545,23 @@ object ManifestSink {
     * millisecond. Archive/branch/tag/epoch copies go through
     * [[writeManifestAs]] directly and PRESERVE the stamp they carry —
     * an archived snapshot keeps the commit time it was published
-    * with.
-    *
-    * The stamp read + publish is SERIALIZED per table directory —
-    * a JVM-wide monitor for same-process writers plus an OS file
-    * lock (`.graft_commit.lock`) for cross-process ones — so two
-    * concurrent committers can never both read the same prior stamp
-    * and mint duplicate committedAt values; [[versionAt]]'s
-    * no-two-snapshots-share-an-instant guarantee holds under
-    * concurrency, not just single-writer luck. Returns the minted
-    * committedAt. */
-  def writeManifest(dir: String, m: Manifest): Long = {
+    * with. Callers hold [[withCommitLock]], so two committers never
+    * read the same prior stamp. */
+  private def stampAndPublish(dir: String, m: Manifest): Long = {
+    val prev = {
+      val f = new File(dir, ManifestFile)
+      if (f.exists()) readStamp(f)._2 else 0L
+    }
+    val stamp = math.max(System.currentTimeMillis(), prev + 1)
+    writeManifestAs(dir, ManifestFile, m.copy(committedAt = stamp))
+    stamp
+  }
+
+  /** Run `body` SERIALIZED per table directory: a JVM-wide monitor for
+    * same-process committers plus an OS file lock
+    * (`.graft_commit.lock`) for cross-process ones. The file lock is
+    * not reentrant — `body` must not take it again. */
+  private def withCommitLock[A](dir: String)(body: => A): A = {
     // Monitor identity must match the OS lock's identity: canonical
     // path (resolves '.', '..' and symlinks), not absolute path — two
     // same-JVM writers addressing one table dir via different
@@ -1534,27 +1571,19 @@ object ManifestSink {
     val monitor = commitMonitors.computeIfAbsent(
       new File(dir).getCanonicalPath, _ => new Object)
     monitor.synchronized {
-      val lockFile = new File(dir, ".graft_commit.lock")
-      val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
+      val ch = java.nio.channels.FileChannel.open(
+        new File(dir, ".graft_commit.lock").toPath,
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.WRITE)
       try {
         val lock = ch.lock()
-        try {
-          val prev = {
-            val f = new File(dir, ManifestFile)
-            if (f.exists()) readStamp(f)._2 else 0L
-          }
-          val stamp = math.max(System.currentTimeMillis(), prev + 1)
-          writeManifestAs(dir, ManifestFile, m.copy(committedAt = stamp))
-          stamp
-        } finally lock.release()
+        try body finally lock.release()
       } finally ch.close()
     }
   }
 
   /** Per-table-directory commit monitors (same-JVM serialization; the
-    * file lock in [[writeManifest]] covers cross-process). */
+    * file lock in [[withCommitLock]] covers cross-process). */
   private val commitMonitors =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -2203,7 +2232,7 @@ final class ManifestBatchWrite(schema: StructType, path: String,
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val entries = messages.collect { case m: ManifestCommitMessage =>
       m.files }.toSeq.flatten
-    val dir = new File(path)
+    val ddl = ManifestSink.nullableDdl(schema)
     // A branch write commits to the branch chain only (the WAP
     // staging path): prior = the branch manifest (createBranch
     // first — a dangling branch write is refused), archives go to
@@ -2214,73 +2243,32 @@ final class ManifestBatchWrite(schema: StructType, path: String,
       ManifestSink.writeManifestAs(path,
         ManifestSink.branchArchiveFile(b, prior.version), prior)
       val version = prior.version + 1
-      val carried = prior.files.map { e =>
-        if (e.schemaDdl.isEmpty &&
-            prior.schemaDdl != ManifestSink.nullableDdl(schema))
-          e.copy(schemaDdl = Some(prior.schemaDdl))
-        else e
-      }
       val stamped = entries.map(_.copy(seq = Some(version)))
       ManifestSink.writeManifestAs(path, ManifestSink.branchManifestFile(b),
-        ManifestSink.Manifest(ManifestSink.nullableDdl(schema),
-          (if (truncateFirst) Seq.empty else carried) ++ stamped, version,
-          if (truncateFirst) Nil else prior.eqDeletes))
+        if (truncateFirst) ManifestSink.Manifest(ddl, stamped, version)
+        else ManifestSink.Manifest(ddl,
+          ManifestSink.carried(prior, ddl) ++ stamped, version,
+          prior.eqDeletes))
       return
     }
-    // Every batch commit is a SNAPSHOT: archive the current base
-    // manifest (immutable history → time travel via asOfVersion),
-    // bump the version, publish. Overwrite starts the new snapshot's
-    // file list empty; append carries the prior list forward. Old
-    // versions' data files stay on disk until vacuum() prunes them.
-    val prior =
-      if (new File(dir, ManifestSink.ManifestFile).exists())
-        Some(ManifestSink.readManifest(path))
-      else None
-    prior.foreach { p =>
-      ManifestSink.writeManifestAs(path,
-        ManifestSink.archiveManifestFile(p.version), p)
+    // Every batch commit is a SNAPSHOT. Overwrite starts the file list
+    // empty, dropping the replaced state's epochs and equality deletes
+    // (compaction materializes them this way: its reader applied them);
+    // append carries the head's files (annotated with their schema when
+    // the write evolved it) and equality deletes forward. New files
+    // enter at THIS commit's sequence number, out of reach of earlier
+    // equality deletes (re-inserts stay visible).
+    ManifestSink.commitSnapshot(path,
+      if (truncateFirst) ManifestSink.Epochs.Retire
+      else ManifestSink.Epochs.Keep) { (prior, version) =>
+      val stamped = entries.map(_.copy(seq = Some(version)))
+      prior.filter(_ => !truncateFirst) match {
+        case Some(p) => ManifestSink.Manifest(ddl,
+          ManifestSink.carried(p, ddl) ++ stamped, version, p.eqDeletes)
+        case None => ManifestSink.Manifest(ddl, stamped, version)
+      }
     }
-    val version = prior.map(_.version + 1).getOrElse(1L)
-    // schema evolution on append: the NEW write's schema defines the
-    // table; carried-forward files written under the old schema are
-    // annotated with it so readers resolve their columns by name
-    val carried = prior.map(p => p.files.map { e =>
-      if (e.schemaDdl.isEmpty &&
-          p.schemaDdl != ManifestSink.nullableDdl(schema))
-        e.copy(schemaDdl = Some(p.schemaDdl))
-      else e
-    }).getOrElse(Seq.empty)
-    // new files enter at THIS commit's sequence number — what keeps
-    // them out of reach of earlier equality deletes (re-inserts stay
-    // visible); carried files keep the seq they entered with
-    val stamped = entries.map(_.copy(seq = Some(version)))
-    val files = if (truncateFirst) stamped else carried ++ stamped
-    // truncate starts a fresh table state → equality deletes of the
-    // replaced state are dropped (compaction materializes them this
-    // way: its reader applied them, its writer emitted clean files);
-    // append carries them — they still mask the carried files
-    val carriedEq =
-      if (truncateFirst) Nil else prior.map(_.eqDeletes).getOrElse(Nil)
-    if (truncateFirst) {
-      // overwrite also retires streaming epoch generations from the
-      // CURRENT view (they belong to the replaced table state); their
-      // files remain referenced by nothing and are swept unless an
-      // archive still lists them
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("_graft_manifest-epoch\\d+\\.json"))
-        .foreach(_.delete())
-    }
-    ManifestSink.writeManifest(path,
-      ManifestSink.Manifest(ManifestSink.nullableDdl(schema), files,
-        version, carriedEq))
-    // sweep only what NO manifest — base, archive, or epoch — lists
-    // (failed/speculative attempt files, replaced-and-unarchived data)
-    val referenced = ManifestSink.listAllManifests(path)
-      .flatMap(f => ManifestSink.readManifestFile(f).files.map(_.name))
-      .toSet
-    dir.listFiles().filter(f => f.getName.endsWith(ManifestSink.DataSuffix)
-      && !referenced(f.getName)).foreach(_.delete())
-    ManifestSink.sweepDeleteFiles(path)
+    ManifestSink.sweep(path, data = true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -2749,13 +2737,55 @@ final class ManifestScan(fullSchema: StructType, prunedSchema: StructType,
   }
 }
 
+/** Offset of the manifest streams: a base-chain snapshot version. */
+final case class ManifestVersionOffset(version: Long)
+    extends org.apache.spark.sql.connector.read.streaming.Offset {
+  override def json(): String = s"""{"version":$version}"""
+}
+
+/** The manifest streams' shared offsets: snapshot VERSIONS — durable,
+  * totally ordered, checkpoint-replayable because manifests are
+  * immutable. The first batch plans the starting snapshot
+  * ([[initial]]), later ones each version step of (start, end]
+  * ([[step]]), from manifests alone (no data IO). */
+abstract class ManifestVersionStream(path: String)
+    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
+  import org.apache.spark.sql.connector.read.streaming.Offset
+
+  /** Partitions of the whole table as of version `e`. */
+  protected def initial(m: ManifestSink.Manifest, e: Long): Seq[InputPartition]
+
+  /** Partitions of version step `v`, from its manifest and v − 1's. */
+  protected def step(prev: ManifestSink.Manifest, curr: ManifestSink.Manifest,
+      v: Long): Seq[InputPartition]
+
+  override def initialOffset(): Offset = ManifestVersionOffset(-1L)
+  override def latestOffset(): Offset =
+    ManifestVersionOffset(ManifestSink.readManifest(path).version)
+  override def deserializeOffset(json: String): Offset =
+    ManifestVersionOffset(
+      new ObjectMapper().readTree(json).get("version").asLong())
+
+  override def planInputPartitions(start: Offset,
+      end: Offset): Array[InputPartition] = {
+    val s = start.asInstanceOf[ManifestVersionOffset].version
+    val e = end.asInstanceOf[ManifestVersionOffset].version
+    if (e <= s) Array.empty
+    else if (s < 0) initial(ManifestSink.readAsOf(path, Some(e)), e).toArray
+    else (s + 1 to e).flatMap { v =>
+      step(ManifestSink.readAsOf(path, Some(v - 1)),
+        ManifestSink.readAsOf(path, Some(v)), v)
+    }.toArray
+  }
+
+  override def commit(end: Offset): Unit = ()
+  override def stop(): Unit = ()
+}
+
 /** Streaming SOURCE over the manifest table (the Delta-source shape:
-  * stream OUT of the lakehouse). Offsets are snapshot VERSIONS —
-  * durable, totally ordered, checkpoint-replayable because manifests
-  * are immutable: the first batch is the full table as of the
-  * then-current version (the initial snapshot), every later batch is
-  * exactly the files APPENDED by versions (start, end], identified
-  * by pure manifest arithmetic (no data IO at planning). A
+  * stream OUT of the lakehouse): the first batch is the full table as
+  * of the then-current version (the initial snapshot), every later
+  * batch is exactly the files APPENDED by versions (start, end]. A
   * non-append commit (DELETE/UPDATE/overwrite/compaction) fails the
   * stream loudly — those rows were already emitted and a pure
   * append-stream cannot retract them — unless
@@ -2767,58 +2797,38 @@ final class ManifestScan(fullSchema: StructType, prunedSchema: StructType,
 final class ManifestMicroBatchStream(path: String, tableSchemaDdl: String,
     prunedFieldNames: Array[String], zoneFilters: Array[sources.Filter],
     ignoreChanges: Boolean)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+    extends ManifestVersionStream(path) {
 
-  private case class VOffset(version: Long) extends Offset {
-    override def json(): String = s"""{"version":$version}"""
-  }
+  private def partOf(m: ManifestSink.Manifest,
+      en: ManifestSink.Entry): InputPartition =
+    ManifestInputPartition(s"$path/${en.name}", en.rows, en.crc,
+      en.schemaDdl.getOrElse(m.schemaDdl), en.deletes,
+      m.eqDeletes.filter(_.seq > en.seq.getOrElse(0L)))
 
-  override def initialOffset(): Offset = VOffset(-1L)
-  override def latestOffset(): Offset =
-    VOffset(ManifestSink.readManifest(path).version)
-  override def deserializeOffset(json: String): Offset =
-    VOffset(new ObjectMapper().readTree(json).get("version").asLong())
+  override protected def initial(m: ManifestSink.Manifest,
+      e: Long): Seq[InputPartition] =
+    m.files.filter(en => ManifestSink.entryMayMatch(en, zoneFilters.toSeq))
+      .map(partOf(m, _))
 
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[VOffset].version
-    val e = end.asInstanceOf[VOffset].version
-    if (e <= s) return Array.empty
-    def partOf(m: ManifestSink.Manifest,
-        en: ManifestSink.Entry): InputPartition =
-      ManifestInputPartition(s"$path/${en.name}", en.rows, en.crc,
-        en.schemaDdl.getOrElse(m.schemaDdl), en.deletes,
-        m.eqDeletes.filter(_.seq > en.seq.getOrElse(0L)))
-    if (s < 0) {
-      // initial snapshot: the whole table as of the stream's start
-      val m = ManifestSink.readAsOf(path, Some(e))
-      m.files.filter(en => ManifestSink.entryMayMatch(en, zoneFilters.toSeq))
-        .map(partOf(m, _)).toArray
-    } else (s + 1 to e).flatMap { v =>
-      val curr = ManifestSink.readAsOf(path, Some(v))
-      val prev = ManifestSink.readAsOf(path, Some(v - 1))
-      val changed = ManifestSink.changedFiles(prev, curr)
-      if (changed.nonEmpty && !ignoreChanges)
-        throw new IllegalStateException(
-          s"graft-manifest streaming source: version $v of $path is not " +
-            s"append-only (${changed.size} files changed or removed under " +
-            "already-emitted rows) — restart from a fresh checkpoint or " +
-            "declare option(\"ignoreChanges\", \"true\")")
-      val prevNames = prev.files.map(_.name).toSet
-      curr.files.filter(en => !prevNames.contains(en.name))
-        .filter(en => ManifestSink.entryMayMatch(en, zoneFilters.toSeq))
-        // the entry AS OF its commit version: later delete state
-        // must not leak into a replayed batch
-        .map(partOf(curr, _))
-    }.toArray
+  override protected def step(prev: ManifestSink.Manifest,
+      curr: ManifestSink.Manifest, v: Long): Seq[InputPartition] = {
+    val changed = ManifestSink.changedFiles(prev, curr)
+    if (changed.nonEmpty && !ignoreChanges)
+      throw new IllegalStateException(
+        s"graft-manifest streaming source: version $v of $path is not " +
+          s"append-only (${changed.size} files changed or removed under " +
+          "already-emitted rows) — restart from a fresh checkpoint or " +
+          "declare option(\"ignoreChanges\", \"true\")")
+    val prevNames = prev.files.map(_.name).toSet
+    curr.files.filter(en => !prevNames.contains(en.name))
+      .filter(en => ManifestSink.entryMayMatch(en, zoneFilters.toSeq))
+      // the entry AS OF its commit version: later delete state
+      // must not leak into a replayed batch
+      .map(partOf(curr, _))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new ManifestReaderFactory(tableSchemaDdl, prunedFieldNames, zoneFilters)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Partition of the streaming CHANGE feed: an ordinary manifest
@@ -2857,82 +2867,60 @@ final case class CdfInputPartition(inner: ManifestInputPartition,
 final class ManifestCdfMicroBatchStream(path: String,
     tableSchemaDdl: String, prunedFieldNames: Array[String],
     ignoreChanges: Boolean)
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+    extends ManifestVersionStream(path) {
 
-  private case class VOffset(version: Long) extends Offset {
-    override def json(): String = s"""{"version":$version}"""
-  }
+  private def applicableEq(m: ManifestSink.Manifest, en: ManifestSink.Entry) =
+    m.eqDeletes.filter(_.seq > en.seq.getOrElse(0L))
 
-  override def initialOffset(): Offset = VOffset(-1L)
-  override def latestOffset(): Offset =
-    VOffset(ManifestSink.readManifest(path).version)
-  override def deserializeOffset(json: String): Offset =
-    VOffset(new ObjectMapper().readTree(json).get("version").asLong())
+  private def partOf(m: ManifestSink.Manifest, en: ManifestSink.Entry,
+      kind: String, v: Long,
+      cdfDel: Seq[ManifestSink.DelFile] = Nil,
+      cdfEq: Seq[ManifestSink.EqDelete] = Nil): InputPartition =
+    CdfInputPartition(ManifestInputPartition(s"$path/${en.name}",
+      en.rows, en.crc, en.schemaDdl.getOrElse(m.schemaDdl), en.deletes,
+      applicableEq(m, en), cdfDel, cdfEq), kind, v)
 
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] = {
-    val s = start.asInstanceOf[VOffset].version
-    val e = end.asInstanceOf[VOffset].version
-    if (e <= s) return Array.empty
-    def applicableEq(m: ManifestSink.Manifest, en: ManifestSink.Entry) =
-      m.eqDeletes.filter(_.seq > en.seq.getOrElse(0L))
-    def partOf(m: ManifestSink.Manifest, en: ManifestSink.Entry,
-        kind: String, v: Long,
-        cdfDel: Seq[ManifestSink.DelFile] = Nil,
-        cdfEq: Seq[ManifestSink.EqDelete] = Nil): InputPartition =
-      CdfInputPartition(ManifestInputPartition(s"$path/${en.name}",
-        en.rows, en.crc, en.schemaDdl.getOrElse(m.schemaDdl), en.deletes,
-        applicableEq(m, en), cdfDel, cdfEq), kind, v)
-    if (s < 0) {
-      val m = ManifestSink.readAsOf(path, Some(e))
-      m.files.map(partOf(m, _, "insert", e)).toArray
-    } else (s + 1 to e).flatMap { v =>
-      val curr = ManifestSink.readAsOf(path, Some(v))
-      val prev = ManifestSink.readAsOf(path, Some(v - 1))
-      val prevBy = prev.files.map(en => en.name -> en).toMap
-      val currBy = curr.files.map(en => en.name -> en).toMap
-      val adds = curr.files.filterNot(en => prevBy.contains(en.name))
-        .map(partOf(curr, _, "insert", v))
-      val removes = prev.files.filterNot(en => currBy.contains(en.name))
-        .map(partOf(prev, _, "delete", v))
-      val deltas = curr.files.flatMap { en =>
-        prevBy.get(en.name).toSeq.flatMap { pe =>
-          if (pe.rows != en.rows || pe.crc != en.crc) {
-            if (ignoreChanges) Nil
-            else throw new IllegalStateException(
-              s"graft-manifest change feed: version $v of $path " +
-                s"rewrote file ${en.name} in place (compaction or " +
-                "copy-on-write) — no row-level change is attributable; " +
-                "restart from a fresh checkpoint or declare " +
-                "option(\"ignoreChanges\", \"true\")")
-          } else {
-            val prevDelNames = pe.deletes.map(_.name).toSet
-            val deltaDel =
-              en.deletes.filterNot(d => prevDelNames.contains(d.name))
-            val prevEq = applicableEq(prev, pe).toSet
-            val deltaEq =
-              applicableEq(curr, en).filterNot(prevEq.contains)
-            if (deltaDel.isEmpty && deltaEq.isEmpty) Nil
-            // the row must have been VISIBLE in v−1 (prev masks) and
-            // be hit by the delta — exactly the newly-deleted rows
-            else Seq(CdfInputPartition(ManifestInputPartition(
-              s"$path/${en.name}", pe.rows, pe.crc,
-              pe.schemaDdl.getOrElse(prev.schemaDdl), pe.deletes,
-              applicableEq(prev, pe), deltaDel, deltaEq),
-              "delete", v))
-          }
+  override protected def initial(m: ManifestSink.Manifest,
+      e: Long): Seq[InputPartition] =
+    m.files.map(partOf(m, _, "insert", e))
+
+  override protected def step(prev: ManifestSink.Manifest,
+      curr: ManifestSink.Manifest, v: Long): Seq[InputPartition] = {
+    val prevBy = prev.files.map(en => en.name -> en).toMap
+    val currBy = curr.files.map(en => en.name -> en).toMap
+    val adds = curr.files.filterNot(en => prevBy.contains(en.name))
+      .map(partOf(curr, _, "insert", v))
+    val removes = prev.files.filterNot(en => currBy.contains(en.name))
+      .map(partOf(prev, _, "delete", v))
+    val deltas = curr.files.flatMap { en =>
+      prevBy.get(en.name).toSeq.flatMap { pe =>
+        if (pe.rows != en.rows || pe.crc != en.crc) {
+          if (ignoreChanges) Nil
+          else throw new IllegalStateException(
+            s"graft-manifest change feed: version $v of $path " +
+              s"rewrote file ${en.name} in place (compaction or " +
+              "copy-on-write) — no row-level change is attributable; " +
+              "restart from a fresh checkpoint or declare " +
+              "option(\"ignoreChanges\", \"true\")")
+        } else {
+          val prevDelNames = pe.deletes.map(_.name).toSet
+          val deltaDel =
+            en.deletes.filterNot(d => prevDelNames.contains(d.name))
+          val prevEq = applicableEq(prev, pe).toSet
+          val deltaEq =
+            applicableEq(curr, en).filterNot(prevEq.contains)
+          if (deltaDel.isEmpty && deltaEq.isEmpty) Nil
+          // the row must have been VISIBLE in v−1 (prev masks) and
+          // be hit by the delta — exactly the newly-deleted rows
+          else Seq(partOf(prev, pe, "delete", v, deltaDel, deltaEq))
         }
       }
-      adds ++ removes ++ deltas
-    }.toArray
+    }
+    adds ++ removes ++ deltas
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new CdfReaderFactory(tableSchemaDdl, prunedFieldNames)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 /** Wraps the ordinary manifest reader, appending the change row's
@@ -3109,28 +3097,16 @@ final class ManifestRowLevelOperation(
         Set.empty[String]
       }
       if (replaced.isEmpty && newEntries.isEmpty) return // matched nothing
-      val merged = ManifestSink.readAll(path)
-      val prior = ManifestSink.readManifest(path)
-      ManifestSink.writeManifestAs(path,
-        ManifestSink.archiveManifestFile(prior.version), prior)
-      val version = prior.version + 1
       val ddl = ManifestSink.nullableDdl(schema)
-      val carried = merged.files.filterNot(e => replaced(e.name)).map { e =>
-        if (e.schemaDdl.isEmpty && merged.schemaDdl != ddl)
-          e.copy(schemaDdl = Some(merged.schemaDdl))
-        else e
+      ManifestSink.commitSnapshot(path, ManifestSink.Epochs.Fold, replaced,
+        newEntries.map(_.name)) { (head, version) =>
+        val merged = head.get
+        ManifestSink.Manifest(ddl,
+          ManifestSink.carried(merged, ddl).filterNot(e => replaced(e.name)) ++
+            newEntries.map(_.copy(seq = Some(version))),
+          version, merged.eqDeletes)
       }
-      val stamped = newEntries.map(_.copy(seq = Some(version)))
-      ManifestSink.writeManifest(path, ManifestSink.Manifest(ddl,
-        carried ++ stamped, version, merged.eqDeletes))
-      ManifestSink.foldEpochTombstones(path)
-      val referenced = ManifestSink.listAllManifests(path)
-        .flatMap(f => ManifestSink.readManifestFile(f).files.map(_.name))
-        .toSet
-      Option(new File(path).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.endsWith(ManifestSink.DataSuffix) &&
-          !referenced(f.getName)).foreach(_.delete())
-      ManifestSink.sweepDeleteFiles(path)
+      ManifestSink.sweep(path, data = true)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =

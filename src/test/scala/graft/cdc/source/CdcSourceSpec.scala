@@ -199,6 +199,36 @@ class CdcSourceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("streaming-only"))
   }
 
+  test("a malformed DML line fails the stream and the batch read, naming the stream and quoting the line") {
+    // cut inside a string value, the way a truncated capture ends
+    val cut = dml(8, 2).take(dml(8, 2).indexOf("\"test\"") + 3)
+    val f = Files.createTempFile("cdc-cut", ".ndjson")
+    Files.write(f, Seq(ddl, dml(7, 1), cut, dml(9, 3)).mkString("\n")
+      .getBytes(UTF_8))
+    def messages(t: Throwable): Seq[String] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).toSeq
+    def named(t: Throwable): Boolean = messages(t).exists(m =>
+      m.contains(s"maxscale-cdc replay file $f: malformed DML line") &&
+        m.contains(cut.take(60)))
+    val q = spark.readStream.format("maxscale-cdc")
+      .option("replayFile", f.toString).load()
+      .writeStream.format("memory").queryName("cdc_cut")
+      .outputMode("append").start()
+    val streamed =
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        try q.processAllAvailable() finally q.stop()
+      }
+    assert(named(streamed), messages(streamed))
+    val batch = intercept[Exception] {
+      spark.read.format("maxscale-cdc").option("replayFile", f.toString)
+        .load().collect()
+    }
+    assert(named(batch), messages(batch))
+    assert(MaxScaleCdcSource.streamName(
+      Map("database" -> "test", "table" -> "tests")) === "test.tests")
+  }
+
   test("replay: crash after offset WAL, before commit — batch re-executes exactly-once") {
     // The mid-batch crash window: the engine has written offsets/N
     // (the WAL entry planInputPartitions ran against) but died before
