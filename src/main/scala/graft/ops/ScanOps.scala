@@ -440,11 +440,7 @@ object ScanOps extends OpPack {
         s"$scratchRoot/manifest-diff"
       // fresh table per run: asOfVersion below names versions 1 and 2
       // absolutely, so the version chain must start from empty
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       val orders = Tables(s, dir, "orders")
       orders.filter(col("o_orderkey") % 3 =!= 0).write.mode("overwrite")
         .format("graft-manifest").save(scratch) // v1
@@ -488,11 +484,7 @@ object ScanOps extends OpPack {
         s"$scratchRoot/manifest-cdf"
       // fresh table per run: the version range below names snapshots
       // 1..4 absolutely, so the chain must start from empty
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       val base = Tables(s, dir, "orders").select(
         col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
@@ -581,11 +573,7 @@ object ScanOps extends OpPack {
     // the Delta-style trade-off — pinned in ManifestSinkSpec.
     "sink_manifest_stream_tail" -> ((s, dir) => {
       val base = s"$scratchRoot/mstream"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      Seq("src", "out", "ckpt").foreach(t => wipe(new java.io.File(s"$base-$t")))
+      Seq("src", "out", "ckpt").foreach(t => rmRf(new java.io.File(s"$base-$t")))
       val supplier = Tables(s, dir, "supplier")
         .select(col("s_suppkey"), col("s_nationkey"), col("s_acctbal"))
       def runOnce(): Unit = {
@@ -622,11 +610,7 @@ object ScanOps extends OpPack {
     // DML/rename/drop/namespace semantics pinned in GraftCatalogSpec.
     "sink_manifest_catalog" -> ((s, dir) => {
       val wh = s"$scratchRoot/catalog-wh"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(wh))
+      rmRf(new java.io.File(wh))
       s.conf.set("spark.sql.catalog.graftsql", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graftsql.warehouse", wh)
       Tables(s, dir, "orders").createOrReplaceTempView("graft_cat_src")
@@ -1234,11 +1218,7 @@ object ScanOps extends OpPack {
     "sink_manifest_mor" -> ((s, dir) => {
       val scratch =
         s"$scratchRoot/manifest-mor"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       Tables(s, dir, "orders")
         .repartition(4)
         .write.mode("overwrite").format("graft-manifest").save(scratch)
@@ -1267,11 +1247,7 @@ object ScanOps extends OpPack {
     "sink_manifest_files" -> ((s, dir) => {
       val scratch =
         s"$scratchRoot/manifest-files"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       Tables(s, dir, "nation")
         .select(col("n_nationkey"), col("n_regionkey"), col("n_name"))
         .repartition(1)
@@ -1338,11 +1314,7 @@ object ScanOps extends OpPack {
     "sink_manifest_eqdelete" -> ((s, dir) => {
       val scratch =
         s"$scratchRoot/manifest-eqdel"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       val base = Tables(s, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)")
@@ -1374,11 +1346,7 @@ object ScanOps extends OpPack {
     "sink_manifest_update" -> ((s, dir) => {
       val scratch =
         s"$scratchRoot/manifest-update"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       Tables(s, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)")
@@ -1410,11 +1378,7 @@ object ScanOps extends OpPack {
     "sink_manifest_merge" -> ((s, dir) => {
       val scratch =
         s"$scratchRoot/manifest-merge"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       val base = Tables(s, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"),
         expr("CAST(round(o_totalprice * 100) AS BIGINT)")
@@ -1446,11 +1410,7 @@ object ScanOps extends OpPack {
     "sink_manifest_compact" -> ((s, dir) => {
       val scratch =
         s"$scratchRoot/manifest-compact"
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
-      wipe(new java.io.File(scratch))
+      rmRf(new java.io.File(scratch))
       val li = Tables(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"),
           expr("CAST(round(l_quantity) AS BIGINT)").as("qty"),

@@ -163,7 +163,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     // Some(Some(spec)) = set the default transform, Some(None) =
     // clear it, None = untouched by this ALTER batch
     var newPartSpec: Option[Option[String]] = None
-    ManifestSink.commitSnapshot(dir.toString, ManifestSink.Epochs.Keep) {
+    ManifestSink.commitSnapshot(dir.toString) {
       (head, version) =>
       val m = head.getOrElse(throw new NoSuchTableException(ident))
       var schema = StructType.fromDDL(m.schemaDdl)

@@ -323,7 +323,7 @@ private[sources] object GraftProcedures {
       case "remove_orphans" => new Proc(
         "remove_orphans",
         "Delete data/delete files in the table directory that no " +
-          "manifest (base, archive, branch, tag, or epoch) references " +
+          "manifest (base, archive, branch or tag) references " +
           "— failed-commit leftovers retention sweeps never touch. " +
           "`older_than` (file mtime) protects in-flight writes; " +
           "`dry_run` reports without deleting",

@@ -153,14 +153,6 @@ object ManifestSink {
   val PageRows = 4096
   val PageBytes: Long = 1L << 20
 
-  /** Streaming epochs publish `_graft_manifest-epoch<N>.json` each; a
-    * scan merges the batch manifest (if any) with every epoch
-    * manifest. The epoch file name IS the idempotence token: a
-    * re-delivered epoch (crash between the engine's offset WAL and its
-    * commit log) finds its manifest already published and discards the
-    * duplicate attempt's files instead of double-publishing. */
-  def epochManifestFile(epochId: Long) = s"_graft_manifest-epoch$epochId.json"
-
   /** Per-file zone map for one integral-typed column (long/int/
     * short/byte/date/timestamp, all carried as Long): the min/max a
     * filtered scan prunes whole files against — Iceberg's
@@ -344,10 +336,14 @@ object ManifestSink {
     * resolution stays pure name-based, bit-identical to before. */
   final case class ColId(name: String, id: Int)
 
+  /** `txns` maps a streaming query id to the last epoch it committed
+    * (Delta's txnAppId → txnVersion): the idempotence token of the
+    * streaming sink, carried forward by every commit (see
+    * [[commitSnapshot]]). */
   final case class Manifest(schemaDdl: String, files: Seq[Entry],
       version: Long = 0L, eqDeletes: Seq[EqDelete] = Nil,
       colIds: Seq[ColId] = Nil, lastColId: Int = -1,
-      committedAt: Long = 0L)
+      committedAt: Long = 0L, txns: Map[String, Long] = Map.empty)
 
   /** Current name→id mapping, synthesized positionally for tables
     * that never declared one (any consistent assignment is valid
@@ -613,14 +609,14 @@ object ManifestSink {
       }
     }
 
-  /** Archived snapshot manifests: every BATCH commit first copies the
+  /** Archived snapshot manifests: every commit first copies the
     * current base manifest to `_graft_manifest.v<N>.json`, so the
     * table's history is a chain of immutable snapshot documents and
     * `option("asOfVersion", N)` time-travels the read (the Iceberg
     * snapshot-log idea at single-document scale). The data-file sweep
-    * only removes files referenced by NO manifest — base, archive, or
-    * epoch — so archived versions stay READABLE until [[vacuum]]
-    * prunes them. */
+    * only removes files referenced by NO manifest — base, archive,
+    * branch or tag — so archived versions stay READABLE until
+    * [[vacuum]] prunes them. */
   def archiveManifestFile(version: Long) = s"_graft_manifest.v$version.json"
 
   /** Small-file compaction (the lakehouse OPTIMIZE verb): rewrite the
@@ -698,12 +694,7 @@ object ManifestSink {
     * DELETEs produce DISJOINT position sets — counts stay additive,
     * and the manifest's live row count stays exact (COUNT(*) pushdown
     * included). The commit archives the prior snapshot first, so time
-    * travel still reads the pre-delete state; streaming epoch
-    * manifests are folded into the new base and left behind as EMPTY
-    * tombstones (the epoch-id idempotence token survives — a
-    * crash-replayed epoch still finds its manifest and discards its
-    * duplicate files, but can no longer double-count the folded
-    * rows).
+    * travel still reads the pre-delete state.
     *
     * Returns the number of rows deleted (0 → no-op, no new
     * snapshot). */
@@ -773,7 +764,7 @@ object ManifestSink {
   def update(spark: org.apache.spark.sql.SparkSession, dir: String,
       condition: String, set: Map[String, String]): Long = {
     import org.apache.spark.sql.functions.{col, expr}
-    val schema = StructType.fromDDL(readAll(dir).schemaDdl)
+    val schema = StructType.fromDDL(readManifest(dir).schemaDdl)
     set.keys.foreach { c =>
       if (!schema.fieldNames.contains(c))
         throw new IllegalArgumentException(
@@ -811,8 +802,8 @@ object ManifestSink {
     * timestamp/string key columns only (same canonicalization as
     * zone maps and blooms). */
   def deleteEq(dir: String, col: String, values: Seq[Any]): Unit =
-    commitSnapshot(dir, Epochs.Fold) { (head, version) =>
-      val merged = head.get
+    commitSnapshot(dir) { (head, version) =>
+      val merged = head.getOrElse(throw nothingCommitted(dir))
       val schema = StructType.fromDDL(merged.schemaDdl)
       val f = schema.fields.find(_.name == col).getOrElse(
         throw new IllegalArgumentException(
@@ -838,12 +829,10 @@ object ManifestSink {
     }
 
   /** SQL TRUNCATE: publish an empty snapshot. Prior base archived
-    * (time travel keeps working until vacuum); streaming epoch
-    * generations retire with the replaced state, exactly like the
-    * batch overwrite commit; equality deletes are dropped — they
-    * applied to the replaced state. */
+    * (time travel keeps working until vacuum); equality deletes are
+    * dropped — they applied to the replaced state. */
   def truncate(dir: String): Unit = {
-    commitSnapshot(dir, Epochs.Retire) { (prior, version) =>
+    commitSnapshot(dir) { (prior, version) =>
       Manifest(prior.getOrElse(throw nothingCommitted(dir)).schemaDdl, Nil,
         version)
     }
@@ -857,16 +846,16 @@ object ManifestSink {
     * stays time-travelable until vacuum. O(metadata): the target's
     * file list (including its delete vectors and equality deletes,
     * seq numbers verbatim) is re-committed; no data file is touched.
-    * Live streaming epoch manifests retire exactly like the batch
-    * overwrite commit — an un-folded epoch newer than the target
-    * would resurrect rows the rollback excludes (same rule as
-    * [[truncate]]). Rolling back to the CURRENT version is a no-op
-    * (no new commit). Returns the new base version. */
+    * Streaming progress is NOT rolled back: the head's transaction
+    * tokens carry forward, so a stream does not re-apply the epochs
+    * whose rows the rollback removed. Rolling back to the CURRENT
+    * version is a no-op (no new commit). Returns the new base
+    * version. */
   def rollback(dir: String, toVersion: Long): Long = {
     val prior = readManifest(dir)
     if (toVersion == prior.version) return prior.version
     val target = readAsOf(dir, Some(toVersion))
-    commitSnapshot(dir, Epochs.Retire)((_, v) =>
+    commitSnapshot(dir)((_, v) =>
       Manifest(target.schemaDdl, target.files, v, target.eqDeletes))
   }
 
@@ -880,7 +869,7 @@ object ManifestSink {
   // the branch state as a NEW base version (the rollback commit
   // shape, audit-preserving). Reads with `option("branch", name)`
   // audit the staged state. Branch surface is batch-only by
-  // declaration: streaming epochs, row-level ops and time travel stay
+  // declaration: streaming writes, row-level ops and time travel stay
   // on the base chain.
 
   def branchManifestFile(name: String) =
@@ -914,18 +903,14 @@ object ManifestSink {
   def tagManifestFile(name: String) =
     s"_graft_manifest.tag-${requireBranchName(name)}.json"
 
-  /** Freeze the CURRENT state (base chain + streaming epochs, i.e.
-    * exactly what a read resolves) as tag `name`, O(metadata).
-    * Returns the tagged version (the base chain's — epochs don't
-    * bump it). */
+  /** Freeze the CURRENT base manifest as tag `name`, O(metadata).
+    * Returns the tagged version. */
   def createTag(dir: String, name: String): Long = {
     val f = new File(dir, tagManifestFile(name))
     if (f.exists()) throw new IllegalArgumentException(
       s"graft-manifest: tag '$name' already exists under $dir")
     val base = readManifest(dir)
-    val merged = readAsOf(dir, None).copy(version = base.version,
-      colIds = base.colIds, lastColId = base.lastColId)
-    writeManifestAs(dir, tagManifestFile(name), merged)
+    writeManifestAs(dir, tagManifestFile(name), base)
     base.version
   }
 
@@ -981,12 +966,10 @@ object ManifestSink {
   /** PUBLISH a branch: re-commit its state as a NEW base version (the
     * [[rollback]] commit shape — history keeps the pre-publish base,
     * O(metadata), no data file moves), then retire the branch chain.
-    * Live streaming epochs retire with the replaced base state, same
-    * rule as [[truncate]]/[[rollback]]. Returns the new base
-    * version. */
+    * Returns the new base version. */
   def fastForward(dir: String, name: String): Long = {
     val b = readBranch(dir, name)
-    val v = commitSnapshot(dir, Epochs.Retire)((_, v) =>
+    val v = commitSnapshot(dir)((_, v) =>
       Manifest(b.schemaDdl, b.files, v, b.eqDeletes))
     dropBranch(dir, name)
     v
@@ -1180,70 +1163,100 @@ object ManifestSink {
     a.files.filterNot(e => bs(sig(a, e))).map(_.name)
   }
 
-  /** What a base-chain commit does with the streaming epoch manifests,
-    * fixed by the kind of commit. `Keep` (appends, schema changes):
-    * they stay live beside the new base. `Fold` (DELETE-type commits):
-    * the head merges them into the base, and each one read stays behind
-    * as an EMPTY tombstone, so the epoch-id idempotence token survives
-    * crash replay without double-counting. `Retire` (overwrite,
-    * truncate, rollback, fast-forward): they go with the replaced
-    * state. */
-  sealed trait Epochs
-  object Epochs {
-    case object Keep extends Epochs
-    case object Fold extends Epochs
-    case object Retire extends Epochs
-  }
-
-  /** THE base-chain snapshot commit. Under [[withCommitLock]] it reads
-    * the head (the prior base, merged with the epochs for `Fold`; None
-    * before a table's first commit), checks that every `inputs` file is
-    * still in it, archives the prior base as `_graft_manifest.v<N>.json`,
-    * and publishes `build(head, N + 1)` with a stamped commit time.
-    * Callers run their Spark jobs BEFORE: only metadata is read and
-    * written under the lock. Because the head is read here, a commit is
-    * rebased onto whatever committed while its job ran. The inputs are
-    * the files the job's output refers to (DELETE targets, copy-on-write
-    * replaced files); if a concurrent commit removed one, the commit
-    * deletes the files it `written`, publishes nothing and throws an
-    * IllegalStateException naming it. Returns the new version. */
-  def commitSnapshot(dir: String, epochs: Epochs,
-      inputs: Iterable[String] = Nil, written: Iterable[String] = Nil)(
+  /** THE snapshot commit. Under [[withCommitLock]] it reads the head
+    * (None before a table's first commit), checks that every `inputs`
+    * file is still in it, archives the head as
+    * `_graft_manifest.v<N>.json`, and publishes `build(head, N + 1)`
+    * with a stamped commit time. Callers run their Spark jobs BEFORE:
+    * only metadata is read and written under the lock. Because the head
+    * is read here, a commit is rebased onto whatever committed while its
+    * job ran. The inputs are the files the job's output refers to
+    * (DELETE targets, copy-on-write replaced files); if a concurrent
+    * commit removed one, the commit deletes the files it `written`,
+    * publishes nothing and throws an IllegalStateException naming it.
+    *
+    * Every commit carries the head's transaction tokens (`txns`)
+    * forward, whatever `build` returns: an overwrite, truncate or
+    * rollback replaces the data, not a stream's progress. A `txn` of
+    * (query id, epoch) is the streaming sink's idempotence token: when
+    * the head already records that epoch or a later one for the query
+    * (a batch re-delivered after a crash between the engine's offset
+    * log and its commit log), the commit deletes `written` and
+    * publishes nothing; otherwise the new snapshot records it. Returns
+    * the new version, or the head's when nothing was published. */
+  def commitSnapshot(dir: String, inputs: Iterable[String] = Nil,
+      written: Iterable[String] = Nil, txn: Option[(String, Long)] = None)(
       build: (Option[Manifest], Long) => Manifest): Long =
     withCommitLock(dir) {
       val baseFile = new File(dir, ManifestFile)
-      val prior =
-        if (baseFile.exists()) Some(readManifestFile(baseFile)) else None
-      val epochFiles = dirFiles(dir).filter(f => isEpoch(f.getName))
-        .sortBy(_.getName).toSeq
-      val folded = if (epochs != Epochs.Fold) Nil
-        else epochFiles.map(f => f -> readManifestFile(f))
       val head =
-        if (epochs != Epochs.Fold) prior
-        else if (prior.isEmpty && folded.isEmpty) throw nothingCommitted(dir)
-        else Some(mergeHead(prior, folded.map(_._2)))
+        if (baseFile.exists()) Some(readManifestFile(baseFile)) else None
+      val txns = head.fold(Map.empty[String, Long])(_.txns)
+      def discard(): Unit = written.foreach(w => new File(dir, w).delete())
       lazy val live = head.toSeq.flatMap(_.files.map(_.name)).toSet
       inputs.find(n => !live(n)).foreach { n =>
-        written.foreach(w => new File(dir, w).delete())
+        discard()
         throw new IllegalStateException(
           s"graft-manifest: $n is no longer in the table at $dir — a " +
             "concurrent commit replaced or removed it; nothing committed")
       }
-      val version = prior.fold(1L)(_.version + 1)
-      val m = build(head, version)
-      prior.foreach(p =>
-        writeManifestAs(dir, archiveManifestFile(p.version), p))
-      if (epochs == Epochs.Retire) epochFiles.foreach(_.delete())
-      stampAndPublish(dir, m)
-      folded.foreach { case (f, e) =>
-        if (e.files.nonEmpty)
-          writeManifestAs(dir, f.getName, Manifest(e.schemaDdl, Nil))
+      if (txn.exists { case (q, e) => txns.get(q).exists(_ >= e) }) {
+        discard()
+        head.fold(0L)(_.version)
+      } else {
+        val version = head.fold(1L)(_.version + 1)
+        val m = build(head, version).copy(txns = txns ++ txn)
+        head.foreach(p =>
+          writeManifestAs(dir, archiveManifestFile(p.version), p))
+        stampAndPublish(dir, m)
+        version
       }
+    }
+
+  /** The snapshot a write of `entries` publishes at `version` over
+    * `prior`. Overwrite starts the file list empty, dropping the
+    * replaced state's equality deletes (compaction materializes them
+    * this way: its reader applied them); append carries the prior
+    * files (annotated with their schema when the write evolved it) and
+    * equality deletes forward. New files enter at THIS commit's
+    * sequence number, out of reach of earlier equality deletes
+    * (re-inserts stay visible). */
+  private def withEntries(prior: Option[Manifest], ddl: String,
+      entries: Seq[Entry], overwrite: Boolean, version: Long): Manifest = {
+    val stamped = entries.map(_.copy(seq = Some(version)))
+    prior.filter(_ => !overwrite) match {
+      case Some(p) =>
+        Manifest(ddl, carried(p, ddl) ++ stamped, version, p.eqDeletes)
+      case None => Manifest(ddl, stamped, version)
+    }
+  }
+
+  /** Commit a batch or streaming write of `entries` to the base chain;
+    * `txn` as in [[commitSnapshot]]. Returns the version. */
+  def commitWrite(dir: String, ddl: String, entries: Seq[Entry],
+      overwrite: Boolean, txn: Option[(String, Long)] = None): Long =
+    commitSnapshot(dir, written = entries.map(_.name), txn = txn)(
+      (head, version) => withEntries(head, ddl, entries, overwrite, version))
+
+  /** Commit a batch write of `entries` to branch `name` only (the WAP
+    * staging path), under the table's commit lock: the branch head is
+    * the prior state (createBranch first — a dangling branch write is
+    * refused), it is archived on the branch's own chain, and the BASE
+    * manifest is untouched. Returns the branch version. */
+  def commitBranch(dir: String, name: String, ddl: String,
+      entries: Seq[Entry], overwrite: Boolean): Long =
+    withCommitLock(dir) {
+      val prior = readBranch(dir, name)
+      writeManifestAs(dir, branchArchiveFile(name, prior.version), prior)
+      val version = prior.version + 1
+      writeManifestAs(dir, branchManifestFile(name),
+        withEntries(Some(prior), ddl, entries, overwrite, version))
       version
     }
 
-  private def nothingCommitted(dir: String) = new IllegalArgumentException(
-    s"graft-manifest: no manifest under $dir — nothing committed")
+  private[sources] def nothingCommitted(dir: String) =
+    new IllegalArgumentException(
+      s"graft-manifest: no $ManifestFile under $dir — nothing committed")
 
   /** Shared DELETE commit core: `hits` is a frame of (_1 = data file
     * name, _2 = physical row ordinal) addresses to mask, each address
@@ -1287,7 +1300,7 @@ object ManifestSink {
       }.collect()
     if (written.isEmpty) return 0L
     val byData = written.groupBy(_._1)
-    commitSnapshot(dir, Epochs.Fold, byData.keys, written.map(_._2)) {
+    commitSnapshot(dir, byData.keys, written.map(_._2)) {
       (head, version) =>
         val merged = head.get
         val entries = merged.files.map { e =>
@@ -1303,8 +1316,8 @@ object ManifestSink {
     written.map(_._3).sum
   }
 
-  /** Delete the files that no manifest — base, archive, epoch, branch
-    * or tag — references: delete files always (a DELETE that lost a
+  /** Delete the files that no manifest — base, archive, branch or
+    * tag — references: delete files always (a DELETE that lost a
     * commit race, refs retired by compaction + vacuum), data files too
     * when `data` (failed or speculative attempts, replaced data). */
   def sweep(dir: String, data: Boolean): Unit = {
@@ -1324,13 +1337,10 @@ object ManifestSink {
   private def dirFiles(dir: String): Array[File] =
     Option(new File(dir).listFiles()).getOrElse(Array.empty)
 
-  private def isEpoch(name: String): Boolean =
-    name.matches("_graft_manifest-epoch\\d+\\.json")
-
   /** Orphan-file cleanup (Iceberg's `remove_orphan_files` verb — the
     * third maintenance knob beside [[vacuum]]/[[expireSnapshots]]):
     * data/delete files sitting in the table directory that NO
-    * manifest — base, archive, branch, tag, or epoch — references.
+    * manifest — base, archive, branch or tag — references.
     * These are failed-commit leftovers (a job wrote its files, died
     * before publishing the manifest) or stray uploads; retention
     * sweeps never touch them because they were never committed. The
@@ -1392,12 +1402,11 @@ object ManifestSink {
   }
 
   /** Every manifest document under `dir`: base, archived snapshots,
-    * and streaming epochs. */
+    * branch chains and tags. */
   def listAllManifests(dir: String): Seq[File] =
     dirFiles(dir)
       .filter(f => f.getName == ManifestFile ||
         f.getName.matches("_graft_manifest\\.v\\d+\\.json") ||
-        isEpoch(f.getName) ||
         // branch chains keep their staged files referenced — a sweep
         // during an open audit must not delete staged data
         f.getName.matches(
@@ -1407,34 +1416,8 @@ object ManifestSink {
         f.getName.matches("_graft_manifest\\.tag-[A-Za-z0-9_]+\\.json"))
       .sortBy(_.getName).toSeq
 
-  /** Every published manifest under `dir` (batch + streaming epochs). */
-  def listManifests(dir: String): Seq[File] =
-    dirFiles(dir)
-      .filter(f => f.getName == ManifestFile || isEpoch(f.getName))
-      .sortBy(_.getName).toSeq
-
-  /** Merged table state: union of all manifests' file lists. The
-    * BASE manifest's schema defines the table; entries from manifests
-    * written under a different schema are annotated with their own,
-    * so the reader can resolve columns by name per file. */
-  def readAll(dir: String): Manifest = {
-    val ms = listManifests(dir)
-    if (ms.isEmpty) throw nothingCommitted(dir)
-    val parsed = ms.map(f => f.getName -> readManifestFile(f))
-    mergeHead(parsed.collectFirst { case (ManifestFile, m) => m },
-      parsed.collect { case (n, m) if n != ManifestFile => m })
-  }
-
-  /** [[readAll]] of parsed documents: epoch entries, then the base's. */
-  private def mergeHead(base: Option[Manifest],
-      epochs: Seq[Manifest]): Manifest = {
-    val schema = base.getOrElse(epochs.head).schemaDdl
-    // equality deletes live on the BASE manifest only (epoch entries
-    // carry no sequence number, so a live equality delete masks them
-    // too — conservative, declared)
-    Manifest(schema, (epochs ++ base).flatMap(carried(_, schema)),
-      eqDeletes = base.map(_.eqDeletes).getOrElse(Nil))
-  }
+  /** The current table state: the base manifest. */
+  def readAll(dir: String): Manifest = readManifest(dir)
 
   /** `m`'s entries as carried into a manifest whose schema is `ddl`:
     * an entry written under `m`'s schema keeps it on record when the
@@ -1517,6 +1500,10 @@ object ManifestSink {
         d.values.foreach(va.add)
       }
     }
+    if (m.txns.nonEmpty) {
+      val tx = root.putObject("txns")
+      m.txns.toSeq.sortBy(_._1).foreach { case (q, e) => tx.put(q, e) }
+    }
     val tmp = new File(dir, s".$fileName.${UUID.randomUUID()}.tmp")
     val out = new FileOutputStream(tmp)
     try out.write(mapper.writerWithDefaultPrettyPrinter()
@@ -1542,7 +1529,7 @@ object ManifestSink {
     * MONOTONIC clock: committedAt = max(now, prior base's stamp + 1),
     * so timestamp time travel ([[versionAt]]) never sees two
     * snapshots share an instant even when commits land within one
-    * millisecond. Archive/branch/tag/epoch copies go through
+    * millisecond. Archive/branch/tag copies go through
     * [[writeManifestAs]] directly and PRESERVE the stamp they carry —
     * an archived snapshot keeps the commit time it was published
     * with. Callers hold [[withCommitLock]], so two committers never
@@ -1640,17 +1627,17 @@ object ManifestSink {
     else Nil
     val lastId = if (root.has("lastColId")) root.get("lastColId").asInt()
       else if (colIds.nonEmpty) colIds.map(_.id).max else -1
+    val txns = if (root.has("txns"))
+      root.get("txns").fields().asScala
+        .map(e => e.getKey -> e.getValue.asLong()).toMap
+    else Map.empty[String, Long]
     normalize(
       Manifest(root.get("schemaDdl").asText(), files, v, eqDeletes,
         colIds, lastId,
         if (root.has("committedAt")) root.get("committedAt").asLong()
-        else 0L))
+        else 0L, txns))
   }
 
-  /** Snapshot read: the current table (base + streaming epochs) by
-    * default, or exactly one archived/base snapshot for
-    * `asOfVersion` (streaming epochs are excluded from time travel —
-    * the version chain tracks BATCH commits, declared). */
   /** Just (version, committedAt) from a manifest document — the two
     * top-level fields timestamp resolution needs. A STREAMING parse
     * that stops as soon as both fields are seen ([[writeManifestAs]]
@@ -1665,8 +1652,7 @@ object ManifestSink {
     * manifest, branch HEADS (`…​.branch-<name>.json`, rewritten in
     * place on every branch commit — two rewrites within the
     * filesystem's mtime resolution that produce equal-length JSON
-    * would serve a stale stamp), tag docs and epoch manifests (which
-    * fold to empty tombstones). */
+    * would serve a stale stamp) and tag docs. */
   private def readStamp(f: File): (Long, Long) = {
     val cacheable = f.getName.matches(".*\\.v\\d+\\.json")
     val key = if (cacheable)
@@ -1785,9 +1771,11 @@ object ManifestSink {
       tsOpt.map(v => versionAt(dir, parseAsOfTimestamp(v))))
   }
 
+  /** Snapshot read: the base manifest by default, or exactly one
+    * archived/base snapshot for `asOfVersion`. */
   def readAsOf(dir: String, asOfVersion: Option[Long]): Manifest =
     asOfVersion match {
-      case None => readAll(dir)
+      case None => readManifest(dir)
       case Some(v) =>
         val base = readManifest(dir)
         if (base.version == v) base
@@ -1802,8 +1790,7 @@ object ManifestSink {
 
   def readManifest(dir: String): Manifest = {
     val f = new File(dir, ManifestFile)
-    if (!f.exists()) throw new IllegalArgumentException(
-      s"graft-manifest: no $ManifestFile under $dir — nothing committed")
+    if (!f.exists()) throw nothingCommitted(dir)
     readManifestFile(f)
   }
 }
@@ -2063,7 +2050,7 @@ final class ManifestTable(tableSchema: StructType, path: String,
     require(info.options.get("tag") == null,
       "graft-manifest: tags are immutable — write to a branch or the " +
         "base chain, then create_tag the committed state")
-    new ManifestWriteBuilder(info.schema(), path,
+    new ManifestWriteBuilder(info.schema(), path, info.queryId(),
       // a catalog table's declared PARTITIONED BY transform is the
       // write default; an explicit write option still overrides
       Option(info.options.get("partitionedBy"))
@@ -2075,7 +2062,7 @@ final class ManifestTable(tableSchema: StructType, path: String,
 }
 
 final class ManifestWriteBuilder(schema: StructType, path: String,
-    partitionedBy: Option[String],
+    queryId: String, partitionedBy: Option[String],
     bloomFilterColumns: Option[String] = None,
     bloomFilterBits: Option[String] = None,
     branch: Option[String] = None)
@@ -2145,28 +2132,32 @@ final class ManifestWriteBuilder(schema: StructType, path: String,
         new ManifestBatchWrite(schema, path, truncateFirst, partitionedBy,
           bloomCols, bloomBits, branch)
       override def toStreaming: StreamingWrite = {
-        // the branch surface is batch-only by declaration: epoch
+        // the branch surface is batch-only by declaration: streaming
         // idempotence tokens live on the base chain
         require(branch.isEmpty,
           "graft-manifest: streaming writes cannot target a branch")
-        new ManifestStreamingWrite(schema, path, partitionedBy,
+        new ManifestStreamingWrite(schema, path, queryId, partitionedBy,
           bloomCols, bloomBits)
       }
     }
   }
 }
 
-/** Streaming (append-mode) manifest sink: each epoch publishes its own
-  * `_graft_manifest-epoch<N>.json`, and the publish is IDEMPOTENT on
-  * the epoch id — the exactly-once half the engine cannot provide
-  * alone. When a crash lands between the offset WAL and the engine's
-  * commit log, the batch is re-executed and this sink is handed the
-  * SAME epoch again with freshly-named data files; finding the epoch
-  * manifest already published, it deletes the duplicate attempt's
-  * files instead of double-publishing (the file-sink metadata-log
-  * trick, one manifest per epoch instead of one global log).
+/** Streaming (append-mode) manifest sink: each epoch is one snapshot
+  * commit, keyed by (query id, epoch) — the exactly-once half the
+  * engine cannot provide alone. `queryId` is the id the checkpoint
+  * persists (Spark passes the query's `id`, not its `runId`), so it
+  * survives a restart. When a crash lands between the offset WAL and
+  * the engine's commit log, the batch is re-executed and this sink is
+  * handed the SAME epoch again with freshly-named data files; the head
+  * already records that epoch for the query, so
+  * [[ManifestSink.commitSnapshot]] deletes the duplicate attempt's
+  * files instead of double-publishing (Structured Streaming's
+  * idempotent sink; Delta keeps the same token as txnAppId/txnVersion).
+  * An epoch whose tasks wrote no file commits nothing.
   */
 final class ManifestStreamingWrite(schema: StructType, path: String,
+    queryId: String,
     partitionedBy: Option[String] = None,
     bloomCols: Seq[String] = Nil,
     bloomBits: Int = ManifestSink.BloomBits)
@@ -2185,15 +2176,9 @@ final class ManifestStreamingWrite(schema: StructType, path: String,
       messages: Array[WriterCommitMessage]): Unit = {
     val entries = messages.collect { case m: ManifestCommitMessage =>
       m.files }.toSeq.flatten
-    val epochFile = new File(path, ManifestSink.epochManifestFile(epochId))
-    if (epochFile.exists()) {
-      // re-delivered epoch: the first publish won; drop the duplicates
-      entries.foreach(e => new File(path, e.name).delete())
-    } else {
-      ManifestSink.writeManifestAs(path,
-        ManifestSink.epochManifestFile(epochId),
-        ManifestSink.Manifest(ManifestSink.nullableDdl(schema), entries))
-    }
+    if (entries.nonEmpty)
+      ManifestSink.commitWrite(path, ManifestSink.nullableDdl(schema),
+        entries, overwrite = false, Some(queryId -> epochId))
   }
 
   override def abort(epochId: Long,
@@ -2233,42 +2218,13 @@ final class ManifestBatchWrite(schema: StructType, path: String,
     val entries = messages.collect { case m: ManifestCommitMessage =>
       m.files }.toSeq.flatten
     val ddl = ManifestSink.nullableDdl(schema)
-    // A branch write commits to the branch chain only (the WAP
-    // staging path): prior = the branch manifest (createBranch
-    // first — a dangling branch write is refused), archives go to
-    // the branch's own chain, the BASE manifest is untouched, and
-    // epoch retirement never happens (epochs belong to the base).
-    branch.foreach { b =>
-      val prior = ManifestSink.readBranch(path, b)
-      ManifestSink.writeManifestAs(path,
-        ManifestSink.branchArchiveFile(b, prior.version), prior)
-      val version = prior.version + 1
-      val stamped = entries.map(_.copy(seq = Some(version)))
-      ManifestSink.writeManifestAs(path, ManifestSink.branchManifestFile(b),
-        if (truncateFirst) ManifestSink.Manifest(ddl, stamped, version)
-        else ManifestSink.Manifest(ddl,
-          ManifestSink.carried(prior, ddl) ++ stamped, version,
-          prior.eqDeletes))
-      return
+    branch match {
+      case Some(b) =>
+        ManifestSink.commitBranch(path, b, ddl, entries, truncateFirst)
+      case None =>
+        ManifestSink.commitWrite(path, ddl, entries, truncateFirst)
+        ManifestSink.sweep(path, data = true)
     }
-    // Every batch commit is a SNAPSHOT. Overwrite starts the file list
-    // empty, dropping the replaced state's epochs and equality deletes
-    // (compaction materializes them this way: its reader applied them);
-    // append carries the head's files (annotated with their schema when
-    // the write evolved it) and equality deletes forward. New files
-    // enter at THIS commit's sequence number, out of reach of earlier
-    // equality deletes (re-inserts stay visible).
-    ManifestSink.commitSnapshot(path,
-      if (truncateFirst) ManifestSink.Epochs.Retire
-      else ManifestSink.Epochs.Keep) { (prior, version) =>
-      val stamped = entries.map(_.copy(seq = Some(version)))
-      prior.filter(_ => !truncateFirst) match {
-        case Some(p) => ManifestSink.Manifest(ddl,
-          ManifestSink.carried(p, ddl) ++ stamped, version, p.eqDeletes)
-        case None => ManifestSink.Manifest(ddl, stamped, version)
-      }
-    }
-    ManifestSink.sweep(path, data = true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -3052,7 +3008,7 @@ final class ManifestRowLevelOperation(
 
     override def toBatch: Batch = new Batch {
       private lazy val planned: Array[InputPartition] = {
-        val m = ManifestSink.readAll(path)
+        val m = ManifestSink.readManifest(path)
         val entries = m.files.filter(e => restrict.forall(_(e.name)))
         replacedFiles = Some(entries.map(_.name).toSet)
         entries.map { e =>
@@ -3098,9 +3054,9 @@ final class ManifestRowLevelOperation(
       }
       if (replaced.isEmpty && newEntries.isEmpty) return // matched nothing
       val ddl = ManifestSink.nullableDdl(schema)
-      ManifestSink.commitSnapshot(path, ManifestSink.Epochs.Fold, replaced,
+      ManifestSink.commitSnapshot(path, replaced,
         newEntries.map(_.name)) { (head, version) =>
-        val merged = head.get
+        val merged = head.getOrElse(throw ManifestSink.nothingCommitted(path))
         ManifestSink.Manifest(ddl,
           ManifestSink.carried(merged, ddl).filterNot(e => replaced(e.name)) ++
             newEntries.map(_.copy(seq = Some(version))),
@@ -3718,14 +3674,9 @@ object ManifestMetadataTable {
         Seq[Any](name, tpe, m.version, m.files.size.toLong,
           m.files.map(_.liveRows).sum)
       val base =
-        if (new java.io.File(dir, ManifestSink.ManifestFile).exists()) {
-          // current state resolves through readAll (base + streaming
-          // epochs) — the refs row must agree with what SELECT sees;
-          // version is the base chain's (epochs don't bump it)
-          val v = ManifestSink.readManifest(path).version
-          Seq(row("main", "base",
-            ManifestSink.readAsOf(path, None).copy(version = v)))
-        } else Nil
+        if (new java.io.File(dir, ManifestSink.ManifestFile).exists())
+          Seq(row("main", "base", ManifestSink.readManifest(path)))
+        else Nil
       val named = Option(dir.listFiles()).getOrElse(Array.empty).toSeq
         .flatMap { f =>
           val n = f.getName

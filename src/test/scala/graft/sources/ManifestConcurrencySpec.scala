@@ -2,7 +2,7 @@ package graft.sources
 
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
 import java.util.concurrent.atomic.AtomicReference
 
 import graft.LocalSpark
@@ -19,6 +19,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - A racing compaction removes the file the DELETE masks, so the
   *    DELETE fails loudly, deletes its delete files, and leaves the
   *    compacted table as it was.
+  *
+  * Two appends to one branch, whose write tasks meet at a barrier
+  * (`paired`) so that both commits start together, both land: a branch
+  * commit reads the branch head under the commit lock.
   */
 class ManifestConcurrencySpec extends AnyFunSuite {
   import ManifestConcurrencySpec.gate
@@ -29,6 +33,10 @@ class ManifestConcurrencySpec extends AnyFunSuite {
       val (scanning, committed) = gate
       scanning.countDown()
       committed.await(60, TimeUnit.SECONDS)
+      true
+    })
+    s.udf.register("paired", (_: Long) => {
+      ManifestConcurrencySpec.pair.await(60, TimeUnit.SECONDS)
       true
     })
     s
@@ -94,9 +102,39 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     assert(keys(dir) === (0L until 100L))
     assert(!new File(dir).list().exists(_.endsWith(ManifestSink.DelSuffix)))
   }
+
+  test("concurrent appends to one branch from two threads all land") {
+    val dir = scratch("branch")
+    writeRange(dir, 0, 1, "overwrite")
+    ManifestSink.createBranch(dir, "audit")
+    val rounds = 8
+    (0 until rounds).foreach { r =>
+      ManifestConcurrencySpec.pair = new CyclicBarrier(2)
+      val failure = new AtomicReference[Throwable]
+      val threads = (1 to 2).map { i =>
+        val k = 2L * r + i
+        new Thread(() =>
+          try spark.range(k, k + 1, 1, 1).toDF("k").filter("paired(k)")
+            .write.mode("append").format("graft-manifest")
+            .option("branch", "audit").save(dir)
+          catch { case e: Throwable => failure.set(e) })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      Option(failure.get).foreach(e => throw e)
+    }
+    assert(spark.read.format("graft-manifest").option("branch", "audit")
+      .load(dir).collect().map(_.getLong(0)).toSeq.sorted ===
+      (0L to 2L * rounds))
+    assert(ManifestSink.readBranch(dir, "audit").version === 1L + 2 * rounds)
+    assert(keys(dir) === Seq(0L))
+  }
 }
 
 object ManifestConcurrencySpec {
+  /** Where two concurrent writes' tasks meet. */
+  @volatile var pair: CyclicBarrier = new CyclicBarrier(1)
+
   /** (the DELETE's scan has started, the racing commit has returned). */
   @volatile var gate: (CountDownLatch, CountDownLatch) =
     (new CountDownLatch(0), new CountDownLatch(0))

@@ -162,9 +162,9 @@ class ManifestSinkSpec extends AnyFunSuite {
   test("streaming: re-delivered epoch is dropped — the epoch manifest is the idempotence token") {
     // The crash window the CDC suite pins on the ENGINE side, now
     // pinned on the SINK side: offsets/N written, engine commits/N
-    // lost, batch N re-executed — the sink already published
-    // _graft_manifest-epochN.json, so the duplicate attempt's files
-    // are discarded, not double-published.
+    // lost, batch N re-executed — the head already records epoch N
+    // for the query, so the duplicate attempt's files are discarded,
+    // not double-published.
     val f = Files.createTempFile("cdc-ms2", ".ndjson")
     val ckptDir = Files.createTempDirectory("cdc-ms2-ckpt")
     val dir = scratch("epoch-idem")
@@ -202,14 +202,81 @@ class ManifestSinkSpec extends AnyFunSuite {
       .select("sequence").collect().map(_.getLong(0)).sorted.toSeq
     assert(seqs == Seq(7L, 8L),
       s"re-delivered epoch must not double-publish, got $seqs")
-    // exactly one manifest per epoch, and no orphaned duplicate files
-    val manifests = ManifestSink.listManifests(dir).map(_.getName)
-    assert(manifests.count(_.startsWith("_graft_manifest-epoch")) >= 2)
+    // the head records the query's last epoch, and no orphaned
+    // duplicate files
+    val queryId = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(ckptDir.resolve("metadata").toFile).get("id").asText()
+    assert(ManifestSink.readManifest(dir).txns === Map(queryId -> 1L))
     val referenced = ManifestSink.readAll(dir).files.map(_.name).toSet
     val onDisk = new File(dir).listFiles()
       .filter(_.getName.endsWith(ManifestSink.DataSuffix)).map(_.getName)
     assert(onDisk.toSet === referenced,
       s"duplicate attempt files must be discarded: ${onDisk.mkString(", ")}")
+  }
+
+  /** Streams `keys` into the manifest table at `dir` as one epoch of a
+    * query checkpointed at `ckpt`. */
+  private def streamInto(dir: String, ckpt: String, keys: Long*): Unit = {
+    import spark.implicits._
+    implicit val sc = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[Long]
+    val q = in.toDS().toDF("k").writeStream.format("graft-manifest")
+      .option("checkpointLocation", ckpt).start(dir)
+    try { in.addData(keys: _*); q.processAllAvailable() } finally q.stop()
+  }
+
+  private val memorySinks = new java.util.concurrent.atomic.AtomicInteger
+
+  /** Every key `readStream` of the manifest table at `dir` emits. */
+  private def readStreamKeys(dir: String): Seq[Long] = {
+    import spark.implicits._
+    val name = s"manifest_keys_${memorySinks.incrementAndGet()}"
+    val q = spark.readStream.format("graft-manifest").load(dir)
+      .writeStream.format("memory").queryName(name).start()
+    try q.processAllAvailable() finally q.stop()
+    spark.table(name).as[Long].collect().toSeq.sorted
+  }
+
+  private def batchKeys(dir: String, k: Long*): Unit = {
+    import spark.implicits._
+    k.toDF("k").coalesce(1)
+      .write.mode("append").format("graft-manifest").save(dir)
+  }
+
+  test("streaming: two queries with their own checkpoints both land in one table") {
+    val dir = scratch("two-queries")
+    streamInto(dir, scratch("two-queries-ckpt1"), 1L, 2L, 3L)
+    streamInto(dir, scratch("two-queries-ckpt2"), 4L, 5L)
+    assert(spark.read.format("graft-manifest").load(dir).count() === 5L,
+      "the second query's epoch 0 is not a re-delivery of the first's")
+    assert(ManifestSink.readManifest(dir).txns.size === 2)
+  }
+
+  test("streaming source: readStream of a table only a stream has written") {
+    val dir = scratch("stream-only")
+    streamInto(dir, scratch("stream-only-ckpt"), 1L, 2L, 3L)
+    assert(readStreamKeys(dir) === Seq(1L, 2L, 3L))
+  }
+
+  test("streaming source: readStream of a batch table with streamed rows emits both") {
+    val dir = scratch("mixed")
+    batchKeys(dir, 1L, 2L)
+    streamInto(dir, scratch("mixed-ckpt"), 3L, 4L, 5L)
+    assert(spark.read.format("graft-manifest").load(dir).count() === 5L)
+    assert(readStreamKeys(dir) === Seq(1L, 2L, 3L, 4L, 5L))
+  }
+
+  test("time travel: asOfVersion reads a streamed commit") {
+    import spark.implicits._
+    val dir = scratch("tt-stream")
+    batchKeys(dir, 1L, 2L)                                  // v1
+    streamInto(dir, scratch("tt-stream-ckpt"), 3L, 4L, 5L)  // v2
+    def asOf(v: Long): Seq[Long] = spark.read.format("graft-manifest")
+      .option("asOfVersion", v.toString).load(dir)
+      .as[Long].collect().toSeq.sorted
+    assert(asOf(2L) === Seq(1L, 2L, 3L, 4L, 5L))
+    assert(asOf(1L) === Seq(1L, 2L))
   }
 
   private def chain(t: Throwable): Seq[String] =
@@ -1395,8 +1462,7 @@ class ManifestSinkSpec extends AnyFunSuite {
     // base chain: 2 rows at v1
     Seq(1L, 2L).toDF("k").coalesce(1)
       .write.mode("overwrite").format("graft-manifest").save(dir)
-    // streaming epoch: 3 more rows — published as an epoch manifest,
-    // the base version does NOT bump
+    // streaming epoch: 3 more rows — committed as version 2
     val in = MemoryStream[Long]
     val ckpt = Files.createTempDirectory("refs-epochs-ckpt").toString
     val q = in.toDS().toDF("k")
@@ -1406,17 +1472,16 @@ class ManifestSinkSpec extends AnyFunSuite {
     in.addData(3L, 4L, 5L)
     q.processAllAvailable(); q.stop()
     assert(spark.read.format("graft-manifest").load(dir).count() === 5L)
-    // refs 'main' must agree with what SELECT count(*) sees (base +
-    // epochs), at the base chain's version
+    // refs 'main' must agree with what SELECT count(*) sees
     val main = spark.read.format("graft-manifest")
       .option("metadata", "refs").load(dir)
       .filter($"ref_name" === "main")
       .select($"version", $"n_live").as[(Long, Long)].head()
-    assert(main === ((1L, 5L)),
+    assert(main === ((2L, 5L)),
       s"refs main row must count epoch rows too, got $main")
     // create_tag freezes the same merged state: after the tag, new
     // epoch rows must NOT appear under the tag name
-    assert(ManifestSink.createTag(dir, "rel") === 1L)
+    assert(ManifestSink.createTag(dir, "rel") === 2L)
     val q2 = in.toDS().toDF("k")
       .writeStream.format("graft-manifest")
       .option("path", dir).option("checkpointLocation", ckpt)
