@@ -11,6 +11,7 @@ import java.util.zip.{CRC32, CheckedInputStream, CheckedOutputStream}
 import scala.collection.JavaConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
   GenericInternalRow, UnsafeProjection, UnsafeRow}
@@ -732,7 +733,15 @@ object ManifestSink {
     * third `count()` job either: it is the sum of `rows` over the
     * head manifest's entries stamped with the append's own sequence
     * number (`seq == version`), exact metadata the commit already
-    * wrote. */
+    * wrote.
+    *
+    * A source whose estimated size (`optimizedPlan.stats`) is no more
+    * than `spark.sql.files.maxPartitionBytes`, Spark's own file split
+    * size, is appended as ONE data file (`coalesce(1)`: no shuffle).
+    * A CDC batch is such a source: an in-memory local frame scans in
+    * `min(rows, defaultParallelism)` partitions, and every partition
+    * would be a file that each later MERGE and DELETE scans as its own
+    * task. A larger source keeps its partitioning. */
   def merge(spark: org.apache.spark.sql.SparkSession, dir: String,
       source: org.apache.spark.sql.DataFrame,
       keyCols: Seq[String]): (Long, Long) = {
@@ -743,7 +752,10 @@ object ManifestSink {
       .join(source.select(keyCols.map(col): _*), keyCols, "left_semi")
       .select(col(MetaFileCol).as("_1"), col(MetaPosCol).as("_2"))
     val nDel = commitDeletes(dir, addr)
-    source.write.mode("append").format("graft-manifest").save(dir)
+    val small = source.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      spark.sessionState.conf.filesMaxPartitionBytes
+    (if (small) source.coalesce(1) else source)
+      .write.mode("append").format("graft-manifest").save(dir)
     val head = readManifest(dir)
     val nIns = head.files.filter(_.seq.contains(head.version)).map(_.rows).sum
     (nDel, nIns)
@@ -1272,32 +1284,20 @@ object ManifestSink {
     * delete files in one commit — the format allows that
     * (`Entry.deletes` is a list, [[Entry.liveRows]] sums it, and the
     * positions stay disjoint because each address occurs once in
-    * `hits`). The job runs over `queryExecution.toRdd`, not a typed
-    * `Dataset` collect, whose result path allocates a 1 MiB output
-    * chunk per task — and here every scan task is a result task. */
+    * `hits`).
+    *
+    * The job is `runJob` over `queryExecution.toRdd` with the named
+    * [[WriteDeletes]] as its task function, so the scan tasks are the
+    * result tasks (no shuffle stage), and Spark's closure cleaner,
+    * which reads and parses the bytecode of a lambda's defining class
+    * on every call, has no lambda to clean. The commit does not sweep:
+    * an unreferenced delete file may belong to a DELETE whose commit
+    * is still to come (a failed commit discards its own files). */
   private def commitDeletes(dir: String,
       hits: org.apache.spark.sql.DataFrame): Long = {
-    val written: Array[(String, String, Long, Long)] =
-      hits.queryExecution.toRdd.mapPartitions { it =>
-        val byFile = scala.collection.mutable.LinkedHashMap
-          .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
-        it.foreach { r =>
-          byFile.getOrElseUpdate(r.getUTF8String(0).toString,
-            scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
-        }
-        byFile.iterator.map { case (dataFile, ps) =>
-          val name = s"$dataFile.${UUID.randomUUID()}$DelSuffix"
-          val crc = new CRC32()
-          val out = new DataOutputStream(new CheckedOutputStream(
-            new BufferedOutputStream(
-              new FileOutputStream(new File(dir, name))), crc))
-          try {
-            out.writeInt(ps.size)
-            ps.sorted.foreach(out.writeLong)
-          } finally out.close()
-          (dataFile, name, ps.size.toLong, crc.getValue)
-        }
-      }.collect()
+    val rdd = hits.queryExecution.toRdd
+    val written = rdd.sparkContext
+      .runJob(rdd, new WriteDeletes(dir), rdd.partitions.indices).flatten
     if (written.isEmpty) return 0L
     val byData = written.groupBy(_._1)
     commitSnapshot(dir, byData.keys, written.map(_._2)) {
@@ -1312,14 +1312,44 @@ object ManifestSink {
         }
         Manifest(merged.schemaDdl, entries, version, merged.eqDeletes)
     }
-    sweep(dir, data = false)
     written.map(_._3).sum
   }
 
+  /** One task of [[commitDeletes]]: writes one delete file under `dir`
+    * per data file among the task's (data file, ordinal) hits and
+    * returns (data file, delete file, count, crc) for each. */
+  private final class WriteDeletes(dir: String)
+      extends ((TaskContext, Iterator[InternalRow]) =>
+        Array[(String, String, Long, Long)]) with Serializable {
+    def apply(ctx: TaskContext, it: Iterator[InternalRow])
+        : Array[(String, String, Long, Long)] = {
+      val byFile = scala.collection.mutable.LinkedHashMap
+        .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+      it.foreach { r =>
+        byFile.getOrElseUpdate(r.getUTF8String(0).toString,
+          scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
+      }
+      byFile.iterator.map { case (dataFile, ps) =>
+        val name = s"$dataFile.${UUID.randomUUID()}$DelSuffix"
+        val crc = new CRC32()
+        val out = new DataOutputStream(new CheckedOutputStream(
+          new BufferedOutputStream(
+            new FileOutputStream(new File(dir, name))), crc))
+        try {
+          out.writeInt(ps.size)
+          ps.sorted.foreach(out.writeLong)
+        } finally out.close()
+        (dataFile, name, ps.size.toLong, crc.getValue)
+      }.toArray
+    }
+  }
+
   /** Delete the files that no manifest — base, archive, branch or
-    * tag — references: delete files always (a DELETE that lost a
-    * commit race, refs retired by compaction + vacuum), data files too
-    * when `data` (failed or speculative attempts, replaced data). */
+    * tag — references: delete files always (a DELETE that died before
+    * its commit, refs retired by compaction + vacuum), data files too
+    * when `data` (failed or speculative attempts, replaced data). A
+    * running DELETE's delete files are unreferenced until it commits,
+    * so a DELETE's own commit does not sweep. */
   def sweep(dir: String, data: Boolean): Unit = {
     val refs = referencedFiles(dir)
     dirFiles(dir).filter { f =>

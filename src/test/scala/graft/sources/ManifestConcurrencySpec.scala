@@ -9,16 +9,19 @@ import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
 /** A graft-manifest commit that races a row-level DELETE. The DELETE's
-  * scan task is held at its first row (`held_true`) until the racing
-  * commit has published, so the interleaving is forced rather than
-  * timed: the DELETE's job starts before the racing commit and commits
-  * after it.
+  * scan task is held at its first row whose key is at or above a bound
+  * (`held_from`) until the racing commit has published, so the
+  * interleaving is forced rather than timed: the DELETE's job starts
+  * before the racing commit and commits after it.
   *
   *  - A racing append is kept: the DELETE's commit reads the head under
   *    the commit lock and rebases onto it.
   *  - A racing compaction removes the file the DELETE masks, so the
   *    DELETE fails loudly, deletes its delete files, and leaves the
   *    compacted table as it was.
+  *  - A DELETE that commits while another DELETE's job runs leaves the
+  *    delete files the running DELETE has already written in place:
+  *    its commit sweeps nothing.
   *
   * Two appends to one branch, whose write tasks meet at a barrier
   * (`paired`) so that both commits start together, both land: a branch
@@ -29,10 +32,12 @@ class ManifestConcurrencySpec extends AnyFunSuite {
 
   private lazy val spark = {
     val s = LocalSpark.spark
-    s.udf.register("held_true", (_: Long) => {
-      val (scanning, committed) = gate
-      scanning.countDown()
-      committed.await(60, TimeUnit.SECONDS)
+    s.udf.register("held_from", (k: Long, from: Long) => {
+      if (k >= from) {
+        val (scanning, committed) = gate
+        scanning.countDown()
+        committed.await(60, TimeUnit.SECONDS)
+      }
       true
     })
     s.udf.register("paired", (_: Long) => {
@@ -54,10 +59,11 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     spark.range(from, until).toDF("k").coalesce(1)
       .write.mode(mode).format("graft-manifest").save(dir)
 
-  /** `ManifestSink.delete(dir, "held_true(k) AND <cond>")`, with `racer`
-    * run on a second thread once the DELETE's scan is under way; the
-    * scan resumes when `racer` returns. */
-  private def deleteRacing(dir: String, cond: String)(racer: => Unit): Long = {
+  /** `ManifestSink.delete(dir, "held_from(k, <from>) AND <cond>")`, with
+    * `racer` run on a second thread once the DELETE's scan is held at a
+    * key `>= from`; the scan resumes when `racer` returns. */
+  private def deleteRacing(dir: String, cond: String,
+      from: Long = 0L)(racer: => Unit): Long = {
     val scanning = new CountDownLatch(1)
     val committed = new CountDownLatch(1)
     gate = (scanning, committed)
@@ -67,7 +73,7 @@ class ManifestConcurrencySpec extends AnyFunSuite {
       catch { case e: Throwable => failure.set(e) }
       finally committed.countDown())
     t.start()
-    try ManifestSink.delete(spark, dir, s"held_true(k) AND $cond")
+    try ManifestSink.delete(spark, dir, s"held_from(k, $from) AND $cond")
     finally {
       t.join()
       Option(failure.get).foreach(e => throw e)
@@ -101,6 +107,26 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     assert(head.files === compacted.files)
     assert(keys(dir) === (0L until 100L))
     assert(!new File(dir).list().exists(_.endsWith(ManifestSink.DelSuffix)))
+  }
+
+  test("a DELETE that commits while another DELETE runs keeps the other's written delete files") {
+    val dir = scratch("deletes")
+    writeRange(dir, 0, 100, "overwrite")
+    writeRange(dir, 100, 200, "append")
+    def delFiles: Seq[String] =
+      new File(dir).list().filter(_.endsWith(ManifestSink.DelSuffix)).toSeq
+    // A's task over keys 0..99 writes its delete file; its task over
+    // keys 100..199 is held until B has committed
+    val n = deleteRacing(dir, "(k < 10 OR k >= 190)", from = 100L) {
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+      while (delFiles.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(delFiles.size === 1, "A's first task wrote no delete file")
+      assert(ManifestSink.delete(spark, dir,
+        "k BETWEEN 50 AND 59 OR k BETWEEN 150 AND 159") === 20L)
+    }
+    assert(n === 20L)
+    assert(keys(dir) === (10L until 190L)
+      .filterNot(k => k % 100 >= 50 && k % 100 < 60))
   }
 
   test("concurrent appends to one branch from two threads all land") {

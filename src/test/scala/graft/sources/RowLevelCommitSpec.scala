@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins the Spark work of a row-level commit (`ManifestSink.delete` and
   * `merge`, the CDC apply loop's two verbs): delete vectors are written
   * by the scan tasks themselves, with no shuffle, and a MERGE evaluates
-  * its source twice, not three times. Also pins what makes that safe:
+  * its source twice, not three times, and appends a small source as one
+  * data file. Also pins what makes the no-shuffle commit safe:
   * a data file may get several delete files in one commit, and every
   * reader still sees exact rows and counts.
   */
@@ -135,6 +136,28 @@ class RowLevelCommitSpec extends AnyFunSuite {
       .selectExpr("k", "k * 10 AS v")
     assert(ManifestSink.merge(spark, pdir, psrc, Seq("k")) === ((10L, 40L)))
     assert(spark.read.format("graft-manifest").load(pdir).count() === 130L)
+  }
+
+  test("merge appends a source no larger than one file split as one data file") {
+    // files the merge of a 200-row in-memory source adds to a 2-file
+    // target; the source scans in defaultParallelism (4) partitions
+    def added(s: SparkSession): Int = {
+      import s.implicits._
+      val dir = scratch("onefile")
+      writeTarget(s, dir, 200L, 2)
+      val source = (100L until 300L).map(k => (k, -k)).toDF("k", "v")
+      assert(source.rdd.getNumPartitions === 4)
+      assert(ManifestSink.merge(s, dir, source, Seq("k")) === ((100L, 200L)))
+      assert(keys(s, dir) ===
+        (0L until 100L).map(k => (k, k)) ++ (100L until 300L).map(k => (k, -k)))
+      val head = ManifestSink.readManifest(dir)
+      head.files.count(_.seq.contains(head.version))
+    }
+    assert(added(spark) === 1)
+    // a split size below the source's estimate keeps its partitioning
+    val split = spark.newSession()
+    split.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+    assert(added(split) === 4)
   }
 
   test("a shuffled merge gives one data file several delete files; reads, count, time travel and changes stay exact") {
