@@ -239,7 +239,7 @@ private[sources] object GraftProcedures {
       case "drop_branch" => new Proc(
         "drop_branch",
         "Abandon a WAP branch: drop its manifest chain; staged files " +
-          "it alone referenced are swept by the next commit/vacuum",
+          "it alone referenced are swept by the next vacuum",
         Seq(
           ("table", StringType, "catalog-relative namespace.table"),
           ("name", StringType, "branch name to drop")),
@@ -275,7 +275,7 @@ private[sources] object GraftProcedures {
       case "drop_tag" => new Proc(
         "drop_tag",
         "Drop a tag: the name stops resolving; files only the tag " +
-          "kept referenced are swept by the next commit/vacuum; " +
+          "kept referenced are swept by the next vacuum; " +
           "`dropped` is false when no such tag existed",
         Seq(
           ("table", StringType, "catalog-relative namespace.table"),

@@ -625,9 +625,10 @@ object ManifestSink {
     * new snapshot. Safe against itself by the commit protocol alone:
     * the read plan lists the old manifest's files, the new files get
     * task-unique names, and the overwrite commit archives the old
-    * manifest (which still references the old files, so the sweep
-    * keeps them) — compaction is just another snapshot, time travel
-    * to the pre-compaction layout keeps working until vacuum. */
+    * manifest (which still references the old files, so a vacuum
+    * keeps them until retention drops it) — compaction is just another
+    * snapshot, time travel to the pre-compaction layout keeps working
+    * until vacuum. */
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
       targetFiles: Int): Unit =
     spark.read.format("graft-manifest").load(dir)
@@ -736,12 +737,14 @@ object ManifestSink {
     * wrote.
     *
     * A source whose estimated size (`optimizedPlan.stats`) is no more
-    * than `spark.sql.files.maxPartitionBytes`, Spark's own file split
-    * size, is appended as ONE data file (`coalesce(1)`: no shuffle).
-    * A CDC batch is such a source: an in-memory local frame scans in
+    * than `spark.sql.files.openCostInBytes`, the size below which Spark
+    * itself judges a separate file to cost more than it holds, is
+    * appended as ONE data file (`coalesce(1)`: no shuffle). A CDC
+    * batch is such a source: an in-memory local frame scans in
     * `min(rows, defaultParallelism)` partitions, and every partition
     * would be a file that each later MERGE and DELETE scans as its own
-    * task. A larger source keeps its partitioning. */
+    * task. A file-backed source that small already scans as one split
+    * per file; a larger source keeps its partitioning. */
   def merge(spark: org.apache.spark.sql.SparkSession, dir: String,
       source: org.apache.spark.sql.DataFrame,
       keyCols: Seq[String]): (Long, Long) = {
@@ -753,7 +756,7 @@ object ManifestSink {
       .select(col(MetaFileCol).as("_1"), col(MetaPosCol).as("_2"))
     val nDel = commitDeletes(dir, addr)
     val small = source.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      spark.sessionState.conf.filesMaxPartitionBytes
+      spark.sessionState.conf.filesOpenCostInBytes
     (if (small) source.coalesce(1) else source)
       .write.mode("append").format("graft-manifest").save(dir)
     val head = readManifest(dir)
@@ -848,7 +851,6 @@ object ManifestSink {
       Manifest(prior.getOrElse(throw nothingCommitted(dir)).schemaDdl, Nil,
         version)
     }
-    sweep(dir, data = true)
   }
 
   /** ROLLBACK to an archived snapshot, audit-preserving (the Iceberg
@@ -935,7 +937,7 @@ object ManifestSink {
   }
 
   /** Drop a tag: the name stops resolving; files only the tag kept
-    * referenced are swept by the next commit/vacuum. Returns whether
+    * referenced are swept by the next vacuum. Returns whether
     * the tag existed — a typo'd name must not be silently swallowed
     * (reads fail loudly on unknown tags; drops report it). */
   def dropTag(dir: String, name: String): Boolean = {
@@ -1290,9 +1292,7 @@ object ManifestSink {
     * [[WriteDeletes]] as its task function, so the scan tasks are the
     * result tasks (no shuffle stage), and Spark's closure cleaner,
     * which reads and parses the bytecode of a lambda's defining class
-    * on every call, has no lambda to clean. The commit does not sweep:
-    * an unreferenced delete file may belong to a DELETE whose commit
-    * is still to come (a failed commit discards its own files). */
+    * on every call, has no lambda to clean. */
   private def commitDeletes(dir: String,
       hits: org.apache.spark.sql.DataFrame): Long = {
     val rdd = hits.queryExecution.toRdd
@@ -1347,9 +1347,12 @@ object ManifestSink {
   /** Delete the files that no manifest — base, archive, branch or
     * tag — references: delete files always (a DELETE that died before
     * its commit, refs retired by compaction + vacuum), data files too
-    * when `data` (failed or speculative attempts, replaced data). A
-    * running DELETE's delete files are unreferenced until it commits,
-    * so a DELETE's own commit does not sweep. */
+    * when `data` (a job that died before its commit, replaced data).
+    * Only the maintenance verbs sweep ([[vacuum]], [[expireSnapshots]],
+    * `sweep_deletes`), never a commit: a running write's data files
+    * and a running DELETE's delete files are unreferenced until it
+    * commits, and a write that fails discards its own (task and job
+    * aborts, `commitSnapshot`'s discard). */
   def sweep(dir: String, data: Boolean): Unit = {
     val refs = referencedFiles(dir)
     dirFiles(dir).filter { f =>
@@ -2253,7 +2256,6 @@ final class ManifestBatchWrite(schema: StructType, path: String,
         ManifestSink.commitBranch(path, b, ddl, entries, truncateFirst)
       case None =>
         ManifestSink.commitWrite(path, ddl, entries, truncateFirst)
-        ManifestSink.sweep(path, data = true)
     }
   }
 
@@ -3092,7 +3094,6 @@ final class ManifestRowLevelOperation(
             newEntries.map(_.copy(seq = Some(version))),
           version, merged.eqDeletes)
       }
-      ManifestSink.sweep(path, data = true)
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =

@@ -8,20 +8,21 @@ import java.util.concurrent.atomic.AtomicReference
 import graft.LocalSpark
 import org.scalatest.funsuite.AnyFunSuite
 
-/** A graft-manifest commit that races a row-level DELETE. The DELETE's
-  * scan task is held at its first row whose key is at or above a bound
-  * (`held_from`) until the racing commit has published, so the
-  * interleaving is forced rather than timed: the DELETE's job starts
-  * before the racing commit and commits after it.
+/** A graft-manifest commit that races a row-level DELETE or an append.
+  * One task of the running job is held at its first row whose key is at
+  * or above a bound (`held_from`) until the racing commit has published,
+  * so the interleaving is forced rather than timed: the running job
+  * starts before the racing commit and commits after it.
   *
   *  - A racing append is kept: the DELETE's commit reads the head under
   *    the commit lock and rebases onto it.
   *  - A racing compaction removes the file the DELETE masks, so the
   *    DELETE fails loudly, deletes its delete files, and leaves the
   *    compacted table as it was.
-  *  - A DELETE that commits while another DELETE's job runs leaves the
-  *    delete files the running DELETE has already written in place:
-  *    its commit sweeps nothing.
+  *  - A DELETE or an append that commits while another job runs leaves
+  *    the files that job's finished tasks have already written (delete
+  *    files of a DELETE, data files of an append) in place: no commit
+  *    sweeps unreferenced files.
   *
   * Two appends to one branch, whose write tasks meet at a barrier
   * (`paired`) so that both commits start together, both land: a branch
@@ -59,11 +60,26 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     spark.range(from, until).toDF("k").coalesce(1)
       .write.mode(mode).format("graft-manifest").save(dir)
 
+  /** Files under `dir` whose names end with `suffix`, once there are at
+    * least `n` of them (waits up to 60 s). */
+  private def awaitFiles(dir: String, suffix: String, n: Int): Seq[String] = {
+    def files = new File(dir).list().filter(_.endsWith(suffix)).toSeq
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+    while (files.size < n && System.nanoTime() < deadline) Thread.sleep(10)
+    files
+  }
+
   /** `ManifestSink.delete(dir, "held_from(k, <from>) AND <cond>")`, with
-    * `racer` run on a second thread once the DELETE's scan is held at a
-    * key `>= from`; the scan resumes when `racer` returns. */
+    * `racer` run as in [[racing]]. */
   private def deleteRacing(dir: String, cond: String,
-      from: Long = 0L)(racer: => Unit): Long = {
+      from: Long = 0L)(racer: => Unit): Long =
+    racing(ManifestSink.delete(spark, dir, s"held_from(k, $from) AND $cond"))(
+      racer)
+
+  /** Runs `job`, one of whose tasks calls `held_from`, with `racer` run
+    * on a second thread once that task is held; the task resumes when
+    * `racer` returns. */
+  private def racing[A](job: => A)(racer: => Unit): A = {
     val scanning = new CountDownLatch(1)
     val committed = new CountDownLatch(1)
     gate = (scanning, committed)
@@ -73,7 +89,7 @@ class ManifestConcurrencySpec extends AnyFunSuite {
       catch { case e: Throwable => failure.set(e) }
       finally committed.countDown())
     t.start()
-    try ManifestSink.delete(spark, dir, s"held_from(k, $from) AND $cond")
+    try job
     finally {
       t.join()
       Option(failure.get).foreach(e => throw e)
@@ -109,24 +125,51 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     assert(!new File(dir).list().exists(_.endsWith(ManifestSink.DelSuffix)))
   }
 
-  test("a DELETE that commits while another DELETE runs keeps the other's written delete files") {
-    val dir = scratch("deletes")
+  /** DELETE A of keys below 10 and from 190 on a two-file table of keys
+    * 0 until 200. A's task over keys 0..99 writes its delete file; then
+    * `racer` runs while A's task over keys 100..199 is held. Returns A's
+    * count. */
+  private def deleteRacingWritten(dir: String)(racer: => Unit): Long = {
     writeRange(dir, 0, 100, "overwrite")
     writeRange(dir, 100, 200, "append")
-    def delFiles: Seq[String] =
-      new File(dir).list().filter(_.endsWith(ManifestSink.DelSuffix)).toSeq
-    // A's task over keys 0..99 writes its delete file; its task over
-    // keys 100..199 is held until B has committed
-    val n = deleteRacing(dir, "(k < 10 OR k >= 190)", from = 100L) {
-      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
-      while (delFiles.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(delFiles.size === 1, "A's first task wrote no delete file")
+    deleteRacing(dir, "(k < 10 OR k >= 190)", from = 100L) {
+      assert(awaitFiles(dir, ManifestSink.DelSuffix, 1).size === 1,
+        "A's first task wrote no delete file")
+      racer
+    }
+  }
+
+  test("a DELETE that commits while another DELETE runs keeps the other's written delete files") {
+    val dir = scratch("deletes")
+    val n = deleteRacingWritten(dir) {
       assert(ManifestSink.delete(spark, dir,
         "k BETWEEN 50 AND 59 OR k BETWEEN 150 AND 159") === 20L)
     }
     assert(n === 20L)
     assert(keys(dir) === (10L until 190L)
       .filterNot(k => k % 100 >= 50 && k % 100 < 60))
+  }
+
+  test("an append that commits while a DELETE runs keeps the DELETE's written delete files") {
+    val dir = scratch("append-deletes")
+    val n = deleteRacingWritten(dir) { writeRange(dir, 200, 300, "append") }
+    assert(n === 20L)
+    assert(keys(dir) === (10L until 190L) ++ (200L until 300L))
+  }
+
+  test("an append that commits while another append runs keeps the other's written data files") {
+    val dir = scratch("appends")
+    writeRange(dir, 0, 100, "overwrite")
+    // the running append's task over keys 100..199 writes its data
+    // file; its task over keys 200..299 is held until the racer has
+    // committed
+    racing(spark.range(100, 300, 1, 2).toDF("k").filter("held_from(k, 200)")
+      .write.mode("append").format("graft-manifest").save(dir)) {
+      assert(awaitFiles(dir, ManifestSink.DataSuffix, 2).size === 2,
+        "the running append's first task wrote no data file")
+      writeRange(dir, 300, 400, "append")
+    }
+    assert(keys(dir) === (0L until 400L))
   }
 
   test("concurrent appends to one branch from two threads all land") {

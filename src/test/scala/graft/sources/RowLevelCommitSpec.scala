@@ -138,7 +138,7 @@ class RowLevelCommitSpec extends AnyFunSuite {
     assert(spark.read.format("graft-manifest").load(pdir).count() === 130L)
   }
 
-  test("merge appends a source no larger than one file split as one data file") {
+  test("merge appends a source no larger than Spark's file open cost as one data file") {
     // files the merge of a 200-row in-memory source adds to a 2-file
     // target; the source scans in defaultParallelism (4) partitions
     def added(s: SparkSession): Int = {
@@ -154,10 +154,10 @@ class RowLevelCommitSpec extends AnyFunSuite {
       head.files.count(_.seq.contains(head.version))
     }
     assert(added(spark) === 1)
-    // a split size below the source's estimate keeps its partitioning
-    val split = spark.newSession()
-    split.conf.set("spark.sql.files.maxPartitionBytes", "1k")
-    assert(added(split) === 4)
+    // an open cost below the source's estimate keeps its partitioning
+    val cheap = spark.newSession()
+    cheap.conf.set("spark.sql.files.openCostInBytes", "1k")
+    assert(added(cheap) === 4)
   }
 
   test("a shuffled merge gives one data file several delete files; reads, count, time travel and changes stay exact") {
